@@ -35,13 +35,17 @@ UDAF_CLASS = "rocana.spark.udaf.AppxMedianBounded"
 SQL_NAME = "appx_median_bounded_1call"
 
 
-def register_jvm_udaf(spark: SparkSession, name: str = SQL_NAME) -> bool:
-    """Register the one-statement JVM UDAF; returns False (and leaves the
-    session untouched) if the jar is missing or the JVM bridge is
-    unavailable, so ``register_all`` keeps working in stripped-down
-    environments."""
+def register_jvm_udaf(spark: SparkSession, name: str = SQL_NAME) -> None:
+    """Register the one-statement JVM UDAF as ``name``. Raises
+    ``RuntimeError`` naming the class and the jar path if the jar is
+    missing or the class fails to load or register (class-version
+    mismatch, bad encoder, corrupt artifact), instead of surfacing much
+    later as an opaque "undefined function appx_median_bounded_1call"."""
     if not os.path.exists(JAR_PATH):
-        return False
+        raise RuntimeError(
+            f"JVM UDAF {UDAF_CLASS}: jar {JAR_PATH} is missing "
+            "(rebuild with tools/build_jvm_udaf.sh)"
+        )
     try:
         spark.sql("ADD JAR '{}'".format(JAR_PATH.replace("'", "\\'")))
         jvm = spark._jvm
@@ -54,19 +58,8 @@ def register_jvm_udaf(spark: SparkSession, name: str = SQL_NAME) -> bool:
         enc = jvm.org.apache.spark.sql.Encoders.row(schema)
         udf = jvm.org.apache.spark.sql.functions.udaf(agg, enc)
         spark._jsparkSession.udf().register(name, udf)
-        return True
-    except Exception as exc:  # pragma: no cover — absent JVM bridge / broken jar
-        # A deliberately stripped-down environment and a genuinely broken
-        # jar (class-version mismatch, bad encoder, corrupt artifact) take
-        # the same return path; the one-line warning keeps the latter
-        # traceable instead of surfacing much later as an opaque
-        # "undefined function appx_median_bounded_1call".
-        import warnings
-
-        warnings.warn(
+    except Exception as exc:
+        raise RuntimeError(
             f"JVM UDAF registration of {UDAF_CLASS} from {JAR_PATH} failed: "
-            f"{type(exc).__name__}: {exc}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return False
+            f"{type(exc).__name__}: {exc}"
+        ) from exc

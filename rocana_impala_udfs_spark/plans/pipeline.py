@@ -690,7 +690,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # coalesce(1) tail measured a consistent 2x regression (it folds
         # the broadcast-probe stage into one task ahead of the sort)
         .orderBy("method")
-        .limit(3)
+        .limit(len(methods))
     )
 
 
@@ -757,8 +757,9 @@ def q_eval_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The d=64 arm is still a fresh live execution of the kernel inside the
     # multi sweep (the determinism sanity row keeps its meaning); only the
     # plan shape changes — 4 scans+4 joins+4 aggs become 1+1+1.
+    dims = (8, 16, 32, 64)
     appr_all = similarity.brute_force_topk_np_multi(
-        emb, queries, k=5, dims_list=(8, 16, 32, 64)
+        emb, queries, k=5, dims_list=dims
     ).select("dim", "query_id", "neighbor_id")
     counts = (
         # k·n_queries-bounded truth: broadcast (no estimate without the
@@ -767,7 +768,7 @@ def q_eval_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dim")
         .agg(F.count(F.lit(1)).cast("bigint").alias("hits"))
     )
-    dims_df = spark.createDataFrame([(d,) for d in (8, 16, 32, 64)], "dim int")
+    dims_df = spark.createDataFrame([(d,) for d in dims], "dim int")
     return (
         # one row per dim survives the agg: broadcast it (no estimate for
         # an agg-over-mapInPandas; SMJ otherwise)
@@ -782,7 +783,7 @@ def q_eval_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ordered emit via TakeOrderedAndProject (see ann_recall_report)
         .orderBy("dim")
-        .limit(4)
+        .limit(len(dims))
     )
 
 
@@ -859,7 +860,7 @@ def q_eval_mrr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17 (guide §2.4, VERDICT r16 #1): one rank join + one aggregation over
     # the method-tagged union replaces the per-method (filter, join, agg)
     # branches. The truth side is tagged by cross-joining the 3-row method
-    # dims onto the checkpointed rank-1 frame and applying each method's
+    # dims onto the rank-1 frame and applying each method's
     # query_id bound — the same per-method truth rows as before, so
     # n_queries (= truth row count), sum_rr6 (exact integer sum) and the
     # mrr double chain are value-identical.
@@ -903,7 +904,7 @@ def q_eval_mrr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ordered emit via TakeOrderedAndProject (see ann_recall_report)
         .orderBy("method")
-        .limit(3)
+        .limit(len(methods))
     )
 
 
@@ -1020,7 +1021,7 @@ def q_eval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ordered emit via TakeOrderedAndProject (see ann_recall_report)
         .orderBy("method")
-        .limit(3)
+        .limit(len(methods))
     )
 
 

@@ -53,8 +53,8 @@ def register_all(spark: SparkSession) -> SparkSession:
     # One-STATEMENT scalable form: a JVM Aggregator (jvm/rocana-udaf.jar)
     # with genuine partial+final aggregation — `SELECT
     # appx_median_bounded_1call(x, k) FROM t GROUP BY g` matches the
-    # reference's single-call DDL ergonomics at any scale. Soft-fails to
-    # False if the jar/JVM bridge is unavailable.
+    # reference's single-call DDL ergonomics at any scale. Raises
+    # RuntimeError (class + jar path) if the jar is missing or fails to load.
     from rocana_impala_udfs_spark.jvm import register_jvm_udaf
 
     register_jvm_udaf(spark)

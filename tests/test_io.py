@@ -374,3 +374,103 @@ def test_bloom_parquet_writes_real_footers_and_prunes(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "o_orderkey" in plan
     assert df.count() == 0
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    ids of the jobs it submitted (listener bus drained first, so a job
+    that ran is visible to the status tracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_warm_path_runs_no_job(spark, tmp_path):
+    """The second load of a table reuses the remembered schema: no
+    schema-inference job, same schema, same rows."""
+    shutil.copy(f"{SF}/orders.parquet", tmp_path / "orders.parquet")
+    sf = str(tmp_path)
+    cold, cold_jobs = _jobs_in_group(
+        spark, "io-schema-cold", lambda: load_table(spark, sf, "orders")
+    )
+    # the cold read infers the schema with a job — what the warm read skips
+    assert cold_jobs
+    warm, warm_jobs = _jobs_in_group(
+        spark, "io-schema-warm", lambda: load_table(spark, sf, "orders")
+    )
+    assert warm_jobs == []
+    assert warm.schema == cold.schema
+    assert sorted(warm.collect()) == sorted(cold.collect())
+
+
+def test_load_table_reinfers_after_rewrite(spark, tmp_path):
+    """A rewritten table (new files) is re-inferred: an added column and a
+    retyped column show up on the next load."""
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    write_parquet(spark.createDataFrame([(1, "x")], "a int, b string"), path)
+    assert load_table(spark, sf, "t").schema.simpleString() == "struct<a:int,b:string>"
+    write_parquet(
+        spark.createDataFrame([("1", "x", 2.5)], "a string, b string, c double"), path
+    )
+    back = load_table(spark, sf, "t")
+    assert back.schema.simpleString() == "struct<a:string,b:string,c:double>"
+    assert [tuple(r) for r in back.collect()] == [("1", "x", 2.5)]
+
+
+def test_load_table_self_join_not_ambiguous(spark):
+    """Two loads of one table are distinct relations, so a self-join
+    resolves each side's columns without an ambiguity error."""
+    from collections import Counter
+
+    a = load_table(spark, SF, "nation")
+    b = load_table(spark, SF, "nation")
+    joined = a.join(b, a["n_regionkey"] == b["n_regionkey"]).select(
+        a["n_name"], b["n_name"].alias("peer")
+    )
+    per_region = Counter(r.n_regionkey for r in a.select("n_regionkey").collect())
+    assert joined.count() == sum(n * n for n in per_region.values())
+
+
+def test_load_table_events_ts_timestamp_on_warm_path(spark):
+    """The events ts normalization still applies when the schema comes
+    from the remembered entry rather than a fresh inference."""
+    from pyspark.sql.types import TimestampType
+
+    cold = load_table(spark, SF, "events")
+    warm, warm_jobs = _jobs_in_group(
+        spark, "io-events-warm", lambda: load_table(spark, SF, "events")
+    )
+    assert warm_jobs == []
+    assert isinstance(warm.schema["ts"].dataType, TimestampType)
+    assert warm.agg(F.min("ts"), F.max("ts")).collect() == cold.agg(
+        F.min("ts"), F.max("ts")
+    ).collect()
+
+
+def test_load_table_concurrent_loads_agree(spark, tmp_path):
+    """Concurrent query builders in one session share the remembered
+    schemas: every load of one table from many threads returns the
+    table's inferred schema and its rows."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    shutil.copy(f"{SF}/nation.parquet", tmp_path / "nation.parquet")
+    sf = str(tmp_path)
+    ref = spark.read.parquet(f"{sf}/nation.parquet")
+    want, n = ref.schema, ref.count()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(load_table, spark, sf, "nation") for _ in range(32)]
+            frames = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(df.schema == want for df in frames)
+    assert {df.count() for df in frames[:4]} == {n}

@@ -68,3 +68,22 @@ def test_committed_jar_matches_source(tmp_path):
         f"bytecode drift in {stale}: jvm/src was edited after the committed "
         "jar was built — rerun tools/build_jvm_udaf.sh and commit the jar"
     )
+
+
+def test_register_jvm_udaf_fails_loudly(spark, monkeypatch, tmp_path):
+    """A missing jar or a class that does not load raises RuntimeError
+    naming the class and the jar path, instead of registering nothing."""
+    from rocana_impala_udfs_spark import jvm
+
+    missing = str(tmp_path / "absent.jar")
+    monkeypatch.setattr(jvm, "JAR_PATH", missing)
+    with pytest.raises(RuntimeError, match="missing") as err:
+        jvm.register_jvm_udaf(spark, name="jvm_udaf_missing_jar")
+    assert jvm.UDAF_CLASS in str(err.value) and missing in str(err.value)
+
+    monkeypatch.setattr(jvm, "JAR_PATH", str(JAR))
+    monkeypatch.setattr(jvm, "UDAF_CLASS", "rocana.spark.udaf.NoSuchAggregator")
+    with pytest.raises(RuntimeError, match="NoSuchAggregator") as err:
+        jvm.register_jvm_udaf(spark, name="jvm_udaf_bad_class")
+    assert str(JAR) in str(err.value)
+    assert not spark.catalog.functionExists("jvm_udaf_bad_class")

@@ -69,11 +69,12 @@ def main() -> None:
         # should match a production layout so the 10×/100× scale curves
         # measure the operators, not a layout artifact. DuckDB's default
         # 122 880-row groups already split the big tables at 10×+; the
-        # explicit size also splits the small ones (documents, embeddings).
+        # explicit size also splits the small ones (documents, embeddings),
+        # capped at that default so large tables keep its splittability.
         n_src = con.execute(
             f"SELECT count(*) FROM read_parquet('{src}/{table}.parquet')"
         ).fetchone()[0]
-        rgs = max(2048, (n_src * mult) // 16)
+        rgs = min(122880, max(2048, (n_src * mult) // 16))
         con.execute(
             f"COPY ({union}) TO '{out}/{table}.parquet'"
             f" (FORMAT PARQUET, ROW_GROUP_SIZE {rgs})"
