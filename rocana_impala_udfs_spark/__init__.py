@@ -9,10 +9,11 @@ surface that makes such functions callable from SQL (reference ``README.md:37-47
 This package re-expresses that Spark-first:
 
 - :mod:`~rocana_impala_udfs_spark.functions` — scalar/aggregate functions,
-  including both a production ``percentile_approx``-backed path and a
-  reference-faithful reservoir-sampling path for ``appx_median_bounded``.
+  including the reference-faithful reservoir-sampling
+  ``appx_median_bounded``, whose one batch implementation is the JVM
+  ``Aggregator`` in :mod:`~rocana_impala_udfs_spark.jvm`.
 - :mod:`~rocana_impala_udfs_spark.operators` — DataFrame-level operators:
-  the scalable two-phase reservoir aggregation, dedup (exact / MinHash-LSH /
+  the reservoir median/percentile aggregates, dedup (exact / MinHash-LSH /
   SimHash / n-gram Jaccard / embedding-cosine), similarity search, multimodal
   column plumbing.
 - :mod:`~rocana_impala_udfs_spark.sources` — parquet/csv/json readers for the

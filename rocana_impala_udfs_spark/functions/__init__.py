@@ -3,17 +3,15 @@
 from rocana_impala_udfs_spark.functions.median import (
     ReservoirState,
     appx_median_bounded,
-    appx_median_bounded_str,
+    appx_percentile_bounded,
     exact_upper_median,
-    make_appx_median_bounded_udf,
     make_reservoir_sample_udf,
 )
 
 __all__ = [
     "ReservoirState",
     "appx_median_bounded",
-    "appx_median_bounded_str",
+    "appx_percentile_bounded",
     "exact_upper_median",
-    "make_appx_median_bounded_udf",
     "make_reservoir_sample_udf",
 ]

@@ -5,71 +5,62 @@ Re-implements the reference library's one aggregate function
 computed by weighted reservoir sampling with a caller-supplied cap
 (``max_samples``) on aggregation-state memory.
 
-Three implementations behind one name, chosen by context:
+Every batch median and percentile runs on one implementation, the JVM
+``Aggregator`` in :mod:`rocana_impala_udfs_spark.jvm`, which Spark plans as
+a partial/final ObjectHashAggregate. :func:`appx_median_bounded` and
+:func:`appx_percentile_bounded` are its Column-level calls; the SQL names
+(``appx_median_bounded`` and its variants) are registered by
+``register_all``. Reference semantics: NULL values are skipped
+(``median.cc:130``), empty input yields SQL NULL (``median.cc:295-298``),
+even-count groups return the *upper* median ``sorted(vals)[n // 2]`` with
+no interpolation (``median.cc:301``), and ``max_samples`` ratchets up,
+never down (``median.cc:157-162``).
 
-1. **Production / 100 TB path** — :func:`appx_median_bounded`: a thin wrapper
-   over Spark's built-in ``percentile_approx`` (JVM-side, whole-stage
-   codegen-eligible, true partial+final aggregation with bounded
-   QuantileSummaries state). ``accuracy`` plays the role of ``max_samples``
-   as the memory/precision knob.
-
-2. **Reference-faithful SQL UDAF** — :func:`make_appx_median_bounded_udf`:
-   a pandas grouped-agg UDF with the reference's exact semantics:
-   NULL values are skipped (``median.cc:130``), empty input yields SQL NULL
-   (``median.cc:295-298``), even-count groups return the *upper* median
-   ``sorted(vals)[n // 2]`` with no interpolation (``median.cc:301``), and
-   ``max_samples`` ratchets up, never down (``median.cc:157-162``).
-
-3. **Scalable faithful operator** — :class:`ReservoirState` powers the
-   two-phase ``mapInPandas``/``applyInPandas`` operator in
-   :mod:`rocana_impala_udfs_spark.operators.reservoir`, which reproduces the
-   full distributed five-phase protocol (init/update/serialize/merge/finalize,
-   ``median.cc:117-304``) with map-side partial aggregation, so only
-   ``max_samples`` values per group per partition cross the shuffle.
+:class:`ReservoirState` is the same protocol as a Python object. It carries
+the streaming medians' state across micro-batches
+(``streaming/median_stream.py``), backs the ``reservoir_sample``
+primitive, and is the executable spec the property tests check.
 
 Randomness: the reference uses boost ``ranlux64_3`` + ``rand()``
 (``median.cc:105,190``); bit-parity is impossible and not a goal (reference
-``median-test.cc:30-31`` uses fuzzy comparison for the same reason). We use
-numpy's PCG64 with a fixed default seed so test runs are reproducible, and the
-result is *exact* (hence deterministic) whenever ``n <= max_samples``.
+``median-test.cc:30-31`` uses fuzzy comparison for the same reason). The
+JVM Aggregator draws from ``ThreadLocalRandom``; :class:`ReservoirState`
+uses numpy's PCG64 with a fixed default seed so test runs are reproducible.
+The result is *exact* (hence deterministic) whenever ``n <= max_samples``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 DEFAULT_SEED = 42
 
-# ---------------------------------------------------------------------------
-# Production path: percentile_approx wrapper
-# ---------------------------------------------------------------------------
-
 
 def appx_median_bounded(col: Column | str, max_samples: int) -> Column:
-    """Bounded-memory approximate median, production path.
+    """Bounded-memory approximate median of ``col`` as a DOUBLE aggregate
+    Column: the JVM function registered as ``appx_median_bounded_double``.
+    Exact whenever the group has at most ``max_samples`` non-null rows."""
+    from rocana_impala_udfs_spark.jvm import udaf_column
 
-    Maps the reference's ``max_samples`` memory cap onto
-    ``percentile_approx``'s ``accuracy`` knob (both bound aggregation-state
-    size; larger = more precise). Fully codegen-eligible and plans as
-    partial+final ``HashAggregate`` — the implementation to use at scale.
-    """
-    accuracy = max(int(max_samples), 100)
-    return F.percentile_approx(col, F.lit(0.5), F.lit(accuracy))
+    return udaf_column("appx_median_bounded_double", col, F.lit(max_samples))
 
 
-def appx_median_bounded_str(col: Column | str, max_samples: int) -> Column:
-    """Reference-compatible variant returning STRING.
+def appx_percentile_bounded(col: Column | str, p: float, max_samples: int) -> Column:
+    """The same reservoir at any percentile ``p`` in [0, 1]: the sorted
+    sample at index ``min(floor(n*p), n-1)`` (p=0.5 is
+    :func:`appx_median_bounded`), as a DOUBLE aggregate Column — the JVM
+    function registered as ``appx_percentile_bounded``."""
+    from rocana_impala_udfs_spark.jvm import udaf_column
 
-    The reference returns the median serialized as decimal text
-    (``median.cc:303``) because Impala <2.0 lacked separate intermediate
-    types; users apply ``CAST(... AS DOUBLE)`` (reference ``README.md:61``).
-    """
-    return appx_median_bounded(col, max_samples).cast("string")
+    if not 0.0 <= p <= 1.0:
+        raise ValueError(f"percentile p must be in [0, 1], got {p}")
+    return udaf_column(
+        "appx_percentile_bounded", col, F.lit(float(p)), F.lit(max_samples)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -118,15 +109,14 @@ class ReservoirState:
         NULL skip (``median.cc:130``): when ``null_mask`` is given (True =
         SQL NULL) only genuine NULLs are dropped and NaN *data* values are
         sampled like any double — exactly the reference (which skips only
-        ``is_null``, ``median.cc:130-131``) and the JVM UDAF
-        (``AppxMedianBounded.java:61``, ``Double.compare`` total order, NaN
-        sorts last — as does ``np.sort``). The registered SQL UDAFs pass
-        this mask since r10 (they receive ``pyarrow.Array`` batches, whose
-        validity bitmap distinguishes NULL from NaN), closing the r9
-        NaN-divergence note. Without a mask (legacy pandas callers, where
-        the Arrow→pandas bridge conflates NULL and NaN into NaN) all NaN
-        are dropped — fine for every NaN-free fixture and driver key, and
-        pinned as the documented fallback in tests/test_median.py.
+        ``is_null``, ``median.cc:130-131``) and the JVM Aggregator
+        (``ReservoirAggregator.java``, ``Double.compare`` total order, NaN
+        sorts last — as does ``np.sort``). Arrow callers pass this mask
+        (the validity bitmap of a ``pyarrow.Array`` distinguishes NULL from
+        NaN). Without a mask (pandas callers, where the Arrow→pandas bridge
+        conflates NULL and NaN into NaN) all NaN are dropped — fine for
+        every NaN-free fixture and driver key, and pinned as the documented
+        fallback in tests/test_reservoir_properties.py.
         """
         if max_samples is not None and int(max_samples) > self.max_samples:
             self.max_samples = int(max_samples)
@@ -222,7 +212,7 @@ class ReservoirState:
 
 
 # ---------------------------------------------------------------------------
-# Faithful SQL UDAF (pandas grouped-agg)
+# reservoir_sample (Arrow grouped-agg UDF)
 # ---------------------------------------------------------------------------
 
 
@@ -230,8 +220,8 @@ def _group_state(x, k) -> ReservoirState:
     """Build the per-group reservoir from Arrow arrays (x = values,
     k = per-row max_samples). The Arrow validity bitmap distinguishes SQL
     NULL from NaN data, so NULLs are skipped and NaN is sampled — the
-    reference's exact rule (``median.cc:130-131``) and bit-for-bit the JVM
-    UDAF's behavior (``AppxMedianBounded.java:61``)."""
+    reference's exact rule (``median.cc:130-131``) and the JVM
+    Aggregator's (``ReservoirAggregator.java``)."""
     import pyarrow.compute as pc
 
     ks = np.asarray(k.drop_null(), dtype=np.float64)
@@ -241,154 +231,6 @@ def _group_state(x, k) -> ReservoirState:
     mask = pc.is_null(x, nan_is_null=False).to_numpy(zero_copy_only=False)
     state.update(vals, null_mask=mask)
     return state
-
-
-def _median_of_group(x, k) -> float | None:
-    return _group_state(x, k).finalize()
-
-
-def make_appx_median_bounded_udf():
-    """Grouped-agg pandas UDF with the reference signature
-    ``(DOUBLE, INT) -> DOUBLE``.
-
-    Mirrors the reference's tolerance of a per-row ``max_samples`` argument
-    ("checking for constant values isn't working", ``median.cc:135-137``) by
-    taking the max seen in the group — the ratchet rule of
-    ``median.cc:157-162``. Exact (and deterministic) whenever the group has
-    at most ``max_samples`` non-null rows, matching ``median-test.cc:66-82``.
-
-    Note: Spark feeds a grouped-agg pandas UDF the whole group (no partial
-    aggregation). Fine for moderate groups; for 100 TB use
-    :func:`appx_median_bounded` or the two-phase operator in
-    ``operators/reservoir.py``.
-
-    r10: grouped-agg **arrow_udf** (Spark 4.1) instead of pandas_udf — the
-    ``pyarrow.Array`` input keeps the validity bitmap, so SQL NULL and NaN
-    data are distinguished and NaN is sampled exactly like the reference
-    and the JVM path (parity pinned in tests/test_median.py).
-    """
-
-    @arrow_udf("double")
-    def appx_median_bounded_udf(x: pa.Array, k: pa.Array) -> float:
-        return _median_of_group(x, k)
-
-    return appx_median_bounded_udf
-
-
-def make_appx_median_bounded_str_udf(cpp_format: bool = False):
-    """STRING-returning variant for exact reference DDL compatibility
-    (``(DOUBLE, INT) RETURNS STRING``, reference ``README.md:40``).
-
-    Default formatting divergence, pinned in tests/test_median.py: the
-    reference's ``ToStringVal`` (``median.cc:29-37``) uses default
-    ``stringstream`` formatting — 6 significant digits — so its string LOSES
-    precision. We return ``repr(float)`` (shortest round-trip form) so the
-    documented ``CAST(appx_median_bounded(x, k) AS DOUBLE)`` idiom recovers
-    the exact double.
-
-    ``cpp_format=True`` opts into byte-level ``stringstream`` parity:
-    ``operator<<(double)`` with the default precision(6) prints like C's
-    ``%g`` with 6 significant digits ("500", "51504.4", "1e+07") — Python's
-    ``%.6g`` is the same algorithm (shortest-of-fixed/scientific, trailing
-    zeros stripped), so the bytes match the C++ output."""
-
-    @arrow_udf("string")
-    def appx_median_bounded_str_udf(x: pa.Array, k: pa.Array) -> str:
-        m = _median_of_group(x, k)
-        if m is None:
-            return None
-        return "%.6g" % m if cpp_format else repr(m)
-
-    return appx_median_bounded_str_udf
-
-
-def make_appx_percentile_bounded_udf():
-    """``appx_percentile_bounded(x, p, k) -> DOUBLE``: the reference's
-    bounded reservoir generalized to any percentile (finalize picks
-    sorted[min(floor(n*p), n-1)]; p=0.5 reproduces ``appx_median_bounded``
-    exactly). ``p`` is a per-call constant column (max over the group, like
-    the k ratchet)."""
-
-    @arrow_udf("double")
-    def appx_percentile_bounded_udf(x: pa.Array, p: pa.Array, k: pa.Array) -> float:
-        ps = np.asarray(p.drop_null(), dtype=np.float64)
-        pct = float(ps.max()) if ps.size else 0.5
-        # finalize_percentile also validates; check here so a bad SQL
-        # literal fails with the argument name, not an index error
-        if not 0.0 <= pct <= 1.0:
-            raise ValueError(f"percentile p must be in [0, 1], got {pct}")
-        return _group_state(x, k).finalize_percentile(pct)
-
-    return appx_percentile_bounded_udf
-
-
-def serialize_reservoir_state(state: ReservoirState) -> list:
-    """Flat ARRAY<DOUBLE> encoding of the aggregation state — the analog of
-    the reference's serialize-to-StringVal at the shuffle boundary
-    (``median.cc:165-194``): ``[max_samples, source_size, n, v1..vn,
-    key1..keyn]``. Weight keys are assigned before encoding, exactly as the
-    reference keys unkeyed samples at serialize time."""
-    state.assign_keys()
-    vals = state.sample_values()
-    return (
-        [float(state.max_samples), float(state.source_size), float(vals.size)]
-        + vals.tolist()
-        + state.keys.tolist()
-    )
-
-
-def deserialize_reservoir_state(flat) -> ReservoirState:
-    """Inverse of :func:`serialize_reservoir_state`."""
-    arr = np.asarray(flat, dtype=np.float64)
-    max_samples, source_size, n = int(arr[0]), int(arr[1]), int(arr[2])
-    st = ReservoirState(max_samples)
-    st.vals = arr[3 : 3 + n].copy()
-    st.keys = arr[3 + n : 3 + 2 * n].copy()
-    st.source_size = source_size
-    return st
-
-
-def make_reservoir_partial_udf():
-    """``reservoir_partial(x, k) -> ARRAY<DOUBLE>`` — the UPDATE+SERIALIZE
-    half of the reference's five-phase protocol (``median.cc:128-194``)
-    exposed to SQL, so the documented DDL surface gets a genuinely scalable
-    two-statement form (see :func:`make_reservoir_merge_median_udf`).
-
-    Spark's grouped-agg pandas UDFs ship whole groups to one worker; the
-    scalable SQL idiom bounds every such group by salting the first GROUP BY
-    (``GROUP BY grp, pmod(hash(id), S)``), then merging the ≤ S bounded
-    states per group in a second aggregate — the same
-    partial/serialize/merge shape as ``operators/reservoir.py``, with
-    intermediate state ≤ S × max_samples values per group regardless of
-    input row count."""
-
-    @arrow_udf("array<double>")
-    def reservoir_partial_udf(x: pa.Array, k: pa.Array) -> list:
-        return serialize_reservoir_state(_group_state(x, k))
-
-    return reservoir_partial_udf
-
-
-def make_reservoir_merge_median_udf():
-    """``reservoir_merge_median(state) -> DOUBLE`` — the MERGE+FINALIZE half
-    (``median.cc:228-304``): key-weighted combine of serialized partials from
-    :func:`make_reservoir_partial_udf`, then the reference's upper-median
-    finalize (empty ⇒ NULL, no interpolation)."""
-
-    @pandas_udf("double")
-    def reservoir_merge_median_udf(states: pd.Series) -> float:
-        merged: ReservoirState | None = None
-        for flat in states:
-            if flat is None:
-                continue
-            st = deserialize_reservoir_state(flat)
-            if merged is None:
-                merged = st
-            else:
-                merged.merge(st)
-        return None if merged is None else merged.finalize()
-
-    return reservoir_merge_median_udf
 
 
 def make_reservoir_sample_udf():

@@ -1,163 +1,20 @@
 package rocana.spark.udaf;
 
-import java.util.ArrayList;
-import java.util.Collections;
-import java.util.List;
-import java.util.concurrent.ThreadLocalRandom;
 import org.apache.spark.sql.Encoder;
 import org.apache.spark.sql.Encoders;
-import org.apache.spark.sql.Row;
-import org.apache.spark.sql.expressions.Aggregator;
 
 /**
- * appx_median_bounded(value DOUBLE, k INT) RETURNS STRING as ONE SQL
- * statement with genuine partial+final aggregation — the typed
- * {@code Aggregator} form of the reference's five-phase UDA protocol,
- * closing the gap between the repo's salted two-statement SQL idiom
- * (functions/median.py: reservoir_partial / reservoir_merge_median) and
- * the reference's single-call DDL ergonomics (README.md:40-46).
- *
- * Faithful to the reference phase by phase:
- *  - reduce  = ReservoirSampleUpdate: NULL skip, Algorithm R with
- *    P(accept)=k/i, k ratchets up, never down (median.cc:128-163).
- *  - merge   = Serialize + Merge: unkeyed samples get weight keys
- *    key=(source_size-r)/source_size, r uniform in [0, n) at the combine
- *    boundary (median.cc:165-194), then the k samples with the LARGEST
- *    keys survive and source_size sums (median.cc:228-282). Spark's
- *    Encoder replaces the manual serialize-to-StringVal, so keying
- *    happens on entry to merge — the same semantic point: keys exist only
- *    to weight cross-partition combines.
- *  - finish  = AppxMedianFinalize: empty input => SQL NULL, else the
- *    sorted sample at index n/2 — the upper median, no interpolation
- *    (median.cc:284-304). Formatting: Double.toString (exact round-trip,
- *    like the Python STRING UDAF's repr default) so the documented
- *    CAST(... AS DOUBLE) idiom recovers the double; the reference's
- *    6-significant-digit stringstream form is the lossy variant
- *    (functions/median.py cpp_format=True documents the divergence).
- *
- * Randomness uses ThreadLocalRandom like the reference's rand() — results
- * are EXACT whenever a group's row count stays within k (every sample
- * retained; no random path taken), which is what the oracle-checked query
- * key and the pytest suite pin.
+ * appx_median_bounded(value DOUBLE, k INT) RETURNS STRING — the reference's
+ * DDL (README.md:40-46). Formats with Double.toString, the shortest form
+ * that round-trips, so the documented CAST(... AS DOUBLE) idiom
+ * (README.md:61) recovers the exact double; the reference's lossy
+ * 6-significant-digit stringstream form is {@link AppxMedianBoundedRefFormat}.
  */
-public class AppxMedianBounded extends Aggregator<Row, ReservoirBuf, String> {
+public class AppxMedianBounded extends ReservoirAggregator<String> {
 
   @Override
-  public ReservoirBuf zero() {
-    return new ReservoirBuf();
-  }
-
-  @Override
-  public ReservoirBuf reduce(ReservoirBuf b, Row in) {
-    if (!in.isNullAt(1)) {
-      int k = in.getInt(1);
-      if (k <= 0) {
-        throw new IllegalArgumentException("max_samples must be positive, got " + k);
-      }
-      if (k > b.getMaxSamples()) {
-        b.setMaxSamples(k); // ratchet, median.cc:157-162
-      }
-    }
-    if (in.isNullAt(0)) {
-      return b; // NULL skip, median.cc:130
-    }
-    // NaN values are sampled like any other double, exactly as the
-    // reference's ReservoirSampleUpdate does (median.cc:128-163 skips
-    // only NULLs). Divergence note: finish() sorts via Double.compare,
-    // which totals-orders NaN above +Inf deterministically, whereas the
-    // reference's operator< leaves NaN placement unspecified.
-    double v = in.getDouble(0);
-    if (b.getMaxSamples() == 0) {
-      b.setMaxSamples(100); // all-null k so far: the Python UDAF's default
-    }
-    int k = b.getMaxSamples();
-    List<Double> vals = b.getVals();
-    List<Double> keys = b.getKeys();
-    if (vals.size() < k) {
-      vals.add(v); // fill phase, median.cc:149-150
-      keys.add(-1.0);
-    } else {
-      long i = b.getSourceSize() + 1; // 1-based stream position
-      if (ThreadLocalRandom.current().nextLong(i) < k) { // P = k/i
-        int slot = ThreadLocalRandom.current().nextInt(k);
-        vals.set(slot, v);
-        keys.set(slot, -1.0);
-      }
-    }
-    b.setSourceSize(b.getSourceSize() + 1);
-    return b;
-  }
-
-  /** Serialize-time keying (median.cc:176-192): unkeyed samples get
-   * key=(source_size-r)/source_size with r uniform in [0, n) — larger
-   * partitions win merges proportionally. */
-  private static void assignKeys(ReservoirBuf b) {
-    int n = b.getVals().size();
-    long ss = b.getSourceSize();
-    if (n == 0 || ss == 0) {
-      return;
-    }
-    List<Double> keys = b.getKeys();
-    for (int i = 0; i < n; i++) {
-      if (keys.get(i) < 0) {
-        long r = ThreadLocalRandom.current().nextLong(n);
-        keys.set(i, (double) (ss - r) / (double) ss);
-      }
-    }
-  }
-
-  @Override
-  public ReservoirBuf merge(ReservoirBuf a, ReservoirBuf b) {
-    assignKeys(a);
-    assignKeys(b);
-    int k = Math.max(a.getMaxSamples(), b.getMaxSamples()); // median.cc:242-254
-    List<Double> vals = new ArrayList<>(a.getVals());
-    List<Double> keys = new ArrayList<>(a.getKeys());
-    vals.addAll(b.getVals());
-    keys.addAll(b.getKeys());
-    if (k > 0 && vals.size() > k) {
-      // keep the k largest keys (the reference's min-heap eviction,
-      // median.cc:263-280): argsort indices by key descending
-      final List<Double> allKeys = keys;
-      final List<Double> allVals = vals;
-      Integer[] idx = new Integer[allVals.size()];
-      for (int i = 0; i < idx.length; i++) {
-        idx[i] = i;
-      }
-      java.util.Arrays.sort(
-          idx, (x, y) -> Double.compare(allKeys.get(y), allKeys.get(x)));
-      List<Double> nv = new ArrayList<>(k);
-      List<Double> nk = new ArrayList<>(k);
-      for (int i = 0; i < k; i++) {
-        nv.add(allVals.get(idx[i]));
-        nk.add(allKeys.get(idx[i]));
-      }
-      vals = nv;
-      keys = nk;
-    }
-    ReservoirBuf out = new ReservoirBuf();
-    out.setMaxSamples(k);
-    out.setVals(vals);
-    out.setKeys(keys);
-    out.setSourceSize(a.getSourceSize() + b.getSourceSize()); // median.cc:281
-    return out;
-  }
-
-  @Override
-  public String finish(ReservoirBuf b) {
-    List<Double> vals = b.getVals();
-    if (vals.isEmpty()) {
-      return null; // empty => NULL, median.cc:295-298
-    }
-    List<Double> sorted = new ArrayList<>(vals);
-    Collections.sort(sorted);
-    double m = sorted.get(sorted.size() / 2); // upper median, median.cc:299-301
-    return Double.toString(m);
-  }
-
-  @Override
-  public Encoder<ReservoirBuf> bufferEncoder() {
-    return Encoders.bean(ReservoirBuf.class);
+  protected String output(double v) {
+    return Double.toString(v);
   }
 
   @Override

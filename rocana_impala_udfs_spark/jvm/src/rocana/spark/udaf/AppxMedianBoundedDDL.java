@@ -28,11 +28,12 @@ import org.apache.spark.sql.types.StructType;
  *   SELECT CAST(appx_median_bounded_ddl(x, 100) AS DOUBLE) FROM t;
  * </pre>
  *
- * Every phase DELEGATES to {@link AppxMedianBounded} (reduce/merge/finish
- * are the single source of truth for the median.cc protocol); this class
+ * Every phase DELEGATES to {@link AppxMedianBounded} (the reduce/merge/finish
+ * of {@link ReservoirAggregator}, the single source of truth for the
+ * median.cc protocol); this class
  * only converts between the engine-managed Catalyst buffer row and
  * {@link ReservoirBuf}. That conversion copies the k-bounded arrays once
- * per row, so the typed Aggregator ({@code appx_median_bounded_1call})
+ * per row, so the typed Aggregator ({@code appx_median_bounded})
  * remains the production path — this adapter exists for DDL parity, and
  * its buffer stays the same bounded k-sample state on the wire.
  */

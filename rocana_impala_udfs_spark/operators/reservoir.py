@@ -1,11 +1,15 @@
-"""Two-phase distributed reservoir aggregation — the reference's five-phase
-UDA protocol (init/update/serialize/merge/finalize, ``median.cc:117-304``)
-re-expressed on Spark's execution model with true map-side partial
-aggregation.
+"""DataFrame-level reservoir aggregates.
 
-Why this exists: PySpark's grouped-agg pandas UDFs ship *whole groups* to one
-worker — no partial aggregation — which is wrong at 100 TB. This operator
-restores the reference's distributed shape:
+:func:`appx_median_bounded_agg` and :func:`appx_percentile_bounded_agg` are
+``groupBy(...).agg(...)`` over the JVM Aggregator
+(:mod:`rocana_impala_udfs_spark.jvm`), which Spark plans as a partial/final
+ObjectHashAggregate: each task reduces its rows to one bounded reservoir per
+group and only those buffers cross the exchange.
+
+:func:`reservoir_sample_agg` returns the sample itself as ARRAY<DOUBLE>,
+which the typed Aggregator's Java encoders cannot emit, so it keeps the
+reference's five-phase protocol (init/update/serialize/merge/finalize,
+``median.cc:117-304``) on :class:`ReservoirState` in two Python phases:
 
 - **Phase 1 (partial)** — ``mapInPandas`` over the scan: one bounded
   :class:`ReservoirState` per group per *partition* (init ``median.cc:117``,
@@ -16,7 +20,7 @@ restores the reference's distributed shape:
   partitions win merges proportionally. Only ``max_samples`` values per group
   per partition cross the exchange.
 - **Phase 2 (final)** — ``groupBy(keys).applyInPandas``: key-weighted heap
-  merge (``median.cc:263-280``) + upper-median finalize (``median.cc:299-301``).
+  merge (``median.cc:263-280``).
 
 Shuffle volume is ≤ partitions × groups × max_samples samples — independent
 of input row count, which is the whole point of the reference's bounded
@@ -33,14 +37,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rocana_impala_udfs_spark.functions.median import DEFAULT_SEED, ReservoirState
+from rocana_impala_udfs_spark.functions.median import (
+    DEFAULT_SEED,
+    ReservoirState,
+    appx_median_bounded,
+    appx_percentile_bounded,
+)
 
 
 def _stable_seed(seed: int, key: tuple) -> int:
     return (seed + zlib.crc32(repr(key).encode())) % (2**31)
 
 
-def reservoir_partials(
+def _partial_reservoirs(
     df: DataFrame,
     value_col: str,
     max_samples: int,
@@ -114,18 +123,18 @@ def reservoir_sample_agg(
     out: str = "samples",
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """The reusable primitive under the median: ``reservoir_sample(col, k)``
+    """The reservoir itself: ``reservoir_sample(col, k)``
     per group, returned as a sorted ARRAY<DOUBLE> (sorted so results are
     deterministic whenever the reservoir is unsaturated — every non-null
     value retained exactly once, matching ``max_samples >= n`` semantics of
     median-test.cc:66-82).
 
-    Same two-phase distributed shape as :func:`appx_median_bounded_agg`:
-    bounded partials per partition, key-weighted heap merge after one
-    shuffle of ≤ partitions × groups × max_samples samples.
+    Two-phase distributed shape (module docstring): bounded partials per
+    partition, key-weighted heap merge after one shuffle of ≤ partitions ×
+    groups × max_samples samples.
     """
     group_cols = list(group_cols or [])
-    partials = reservoir_partials(df, value_col, max_samples, group_cols, seed)
+    partials = _partial_reservoirs(df, value_col, max_samples, group_cols, seed)
     schema = (
         ", ".join(f"`{c}` string" for c in group_cols)
         + (", " if group_cols else "")
@@ -161,17 +170,14 @@ def appx_median_bounded_agg(
     max_samples: int,
     group_cols: list[str] | None = None,
     out: str = "median",
-    seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """Full two-phase bounded-median aggregation.
-
-    ``appx_median_bounded(value_col, max_samples) GROUP BY group_cols`` with
-    the reference's exact semantics, but scalable: the shuffle carries only
-    serialized reservoir states. Exact when each group has ≤ ``max_samples``
-    non-null rows. Group columns come back with their original types.
-    """
-    return appx_percentile_bounded_agg(
-        df, value_col, 0.5, max_samples, group_cols, out, seed
+    """``appx_median_bounded(value_col, max_samples) GROUP BY group_cols``
+    with the reference's semantics, as a DOUBLE column ``out``. Exact when
+    each group has ≤ ``max_samples`` non-null rows; a global aggregate over
+    empty input is one NULL row (``median.cc:295-298``)."""
+    value = F.col(value_col).cast("double")
+    return df.groupBy(*(group_cols or [])).agg(
+        appx_median_bounded(value, max_samples).alias(out)
     )
 
 
@@ -182,51 +188,12 @@ def appx_percentile_bounded_agg(
     max_samples: int,
     group_cols: list[str] | None = None,
     out: str = "percentile",
-    seed: int = DEFAULT_SEED,
 ) -> DataFrame:
     """The reference's bounded-reservoir aggregate generalized to any
-    percentile: identical five-phase protocol and shuffle bound, finalize
-    picks sorted[min(floor(n*p), n-1)] (p=0.5 == the reference's
-    upper-median rule, ``median.cc:299-301``). Exact whenever each group
-    has ≤ ``max_samples`` non-null rows."""
-    if not 0.0 <= p <= 1.0:
-        raise ValueError(f"percentile p must be in [0, 1], got {p}")
-    group_cols = list(group_cols or [])
-    partials = reservoir_partials(df, value_col, max_samples, group_cols, seed)
-    schema = (
-        ", ".join(f"`{c}` string" for c in group_cols)
-        + (", " if group_cols else "")
-        + f"`{out}` double"
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: ReservoirState | None = None
-        for row in pdf.itertuples(index=False):
-            st = ReservoirState(max_samples, seed=seed)
-            st.vals = np.asarray(row.samples, dtype=np.float64)
-            st.keys = np.asarray(row.keys, dtype=np.float64)
-            st.source_size = int(row.source_size)
-            acc = st if acc is None else (acc.merge(st) or acc)
-        median = acc.finalize_percentile(p) if acc is not None else None
-        head = [pdf.iloc[0][c] for c in group_cols]
-        return pd.DataFrame([head + [median]], columns=group_cols + [out])
-
-    if group_cols:
-        result = partials.groupBy(*group_cols).applyInPandas(merge_group, schema=schema)
-        orig_types = {f.name: f.dataType.simpleString() for f in df.select(*group_cols).schema.fields}
-        return result.select(
-            *[F.col(c).cast(orig_types[c]).alias(c) for c in group_cols], F.col(out)
-        )
-    # Global aggregate: a single merge group; empty input => one NULL row
-    # (median.cc:295-298) via a sentinel union.
-    merged = partials.groupBy(F.lit(1).alias("_one")).applyInPandas(
-        lambda pdf: merge_group(pdf).assign(_one=1)[[f for f in [out, "_one"]]],
-        schema=f"`{out}` double, `_one` int",
-    )
-    sentinel = df.sparkSession.range(1).select(F.lit(None).cast("double").alias(out), F.lit(0).alias("_one"))
-    return (
-        merged.unionByName(sentinel)
-        .orderBy(F.col("_one").desc())
-        .limit(1)
-        .select(out)
+    percentile: finalize picks sorted[min(floor(n*p), n-1)] (p=0.5 == the
+    reference's upper-median rule, ``median.cc:299-301``). Exact whenever
+    each group has ≤ ``max_samples`` non-null rows."""
+    value = F.col(value_col).cast("double")
+    return df.groupBy(*(group_cols or [])).agg(
+        appx_percentile_bounded(value, p, max_samples).alias(out)
     )

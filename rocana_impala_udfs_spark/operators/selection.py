@@ -3,7 +3,7 @@ histogram-guided range narrowing — the 100 TB-correct EXACT median.
 
 The repo's three median paths each own a regime:
 
-- ``appx_median_bounded`` (reservoir / percentile_approx): bounded state,
+- ``appx_median_bounded`` (the JVM reservoir Aggregator): bounded state,
   approximate — the reference's own trade (``median.cc:45-47``).
 - window-sort exact median: exact but shuffles and sorts the full column —
   fine at test SF, wrong at 100 TB.

@@ -18,7 +18,8 @@ be algebraic.)
 The same decomposition rule the reference encodes in its UDA protocol
 applies: only algebraic aggregates (sum/count/min/max → avg) can re-combine
 from partials; the bounded median handles skew differently, via its own
-bounded per-partition partials (operators/reservoir.py).
+bounded per-task partial buffers (the JVM Aggregator behind
+operators/reservoir.py).
 """
 
 from __future__ import annotations

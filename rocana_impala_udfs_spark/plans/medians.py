@@ -87,7 +87,8 @@ def q_median_value_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_median_sql_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered SQL UDAF route — the reference's documented usage:
-    ``CAST(appx_median_bounded(x, k) AS DOUBLE)`` (README.md:61)."""
+    ``CAST(appx_median_bounded(x, k) AS DOUBLE)`` (README.md:61), the
+    STRING-returning JVM Aggregator."""
     register_all(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_udaf")
     return spark.sql(
@@ -98,43 +99,33 @@ def q_median_sql_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_median_sql_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALABLE SQL form of the reference's protocol: the grouped-agg
-    convenience UDAF (q_median_sql_udaf) ships whole groups to one worker,
-    so here the first GROUP BY is salted — every shipped group is bounded to
-    ~1/16 of its rows — and ``reservoir_partial`` (update+serialize,
-    median.cc:128-194) emits bounded serialized states that
-    ``reservoir_merge_median`` (merge+finalize, median.cc:228-304) combines
-    per real group. Intermediate state is ≤ 16 × max_samples values per
-    group no matter the input size: the reference's own answer to large
-    groups, expressed in two SQL aggregates. Exact here because BIG_K keeps
-    every reservoir unsaturated (median-test.cc:66-82 semantics)."""
+    """The reference protocol's two phases from SQL in one call: the
+    update/serialize half (median.cc:128-194) and the merge/finalize half
+    (median.cc:228-304) are Spark's partial and final ObjectHashAggregate
+    around one exchange, so only bounded reservoirs cross the shuffle and
+    no salting is needed. Grouped by ``l_linestatus`` on
+    ``l_extendedprice``; exact here because BIG_K keeps every reservoir
+    unsaturated (median-test.cc:66-82 semantics)."""
     register_all(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_twophase")
     return spark.sql(
-        f"""WITH partials AS (
-                SELECT l_linestatus,
-                       reservoir_partial(l_extendedprice, {BIG_K}) AS state
-                FROM _li_twophase
-                GROUP BY l_linestatus, pmod(hash(l_orderkey), 16)
-            )
-            SELECT l_linestatus,
-                   reservoir_merge_median(state) AS median_price
-            FROM partials GROUP BY l_linestatus"""
+        f"""SELECT l_linestatus,
+                   appx_median_bounded_double(l_extendedprice, {BIG_K}) AS median_price
+            FROM _li_twophase GROUP BY l_linestatus"""
     )
 
 
 def q_median_sql_onecall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ONE-statement scalable SQL median: the JVM ``Aggregator``
-    (jvm/rocana-udaf.jar, the five-phase protocol of ``median.cc`` in
-    ~150 lines of Java) registered into the session catalog, so the
-    reference's exact DDL ergonomics — ``SELECT appx_median_bounded(x, k)
-    FROM t GROUP BY g`` as a single call (README.md:40-46) — run with
-    GENUINE partial+final aggregation: Spark plans ObjectHashAggregate
-    partial/final, each executor reduces its partitions to one ≤ k-sample
-    reservoir, and only serialized buffers cross the exchange — the same
-    wire shape as the reference's Impala UDA, no salting needed. Exact
-    here because BIG_K keeps every reservoir unsaturated
-    (median-test.cc:66-82 semantics)."""
+    """The one-statement SQL median under its older name,
+    ``appx_median_bounded_1call`` — the same JVM ``Aggregator``
+    (jvm/rocana-udaf.jar) as ``appx_median_bounded``, so the reference's
+    DDL ergonomics — ``SELECT appx_median_bounded(x, k) FROM t GROUP BY g``
+    as a single call (README.md:40-46) — run with genuine partial+final
+    aggregation: Spark plans ObjectHashAggregate partial/final, each
+    executor reduces its partitions to one ≤ k-sample reservoir, and only
+    serialized buffers cross the exchange — the same wire shape as the
+    reference's Impala UDA. Exact here because BIG_K keeps every reservoir
+    unsaturated (median-test.cc:66-82 semantics)."""
     register_all(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_onecall")
     return spark.sql(
@@ -159,7 +150,7 @@ def q_median_exact_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_p90_value_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bounded reservoir generalized to p90 (same five-phase protocol,
+    """The bounded reservoir generalized to p90 (the same JVM Aggregator,
     finalize at sorted[min(floor(n*0.9), n-1)]); exact at this SF because
     BIG_K exceeds every group, so the oracle can pin the exact element."""
     from rocana_impala_udfs_spark.operators.reservoir import appx_percentile_bounded_agg
@@ -276,20 +267,19 @@ SELECT c_mktsegment, x AS median_name10 FROM (
 def q_window_median_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UDAF used as a window function (SURVEY §2.2 'a windowed
     appx_median_bounded falls out of registration'): per-row median of the
-    row's return-flag partition, via the grouped-agg pandas UDF over an
-    unbounded window."""
+    row's return-flag partition, the JVM Aggregator evaluated by WindowExec
+    over an unbounded window."""
     from pyspark.sql import Window
 
-    from rocana_impala_udfs_spark.functions.median import make_appx_median_bounded_udf
+    from rocana_impala_udfs_spark.functions.median import appx_median_bounded
 
     li = load_table(spark, sf_dir, "lineitem")
-    udf = make_appx_median_bounded_udf()
     w = Window.partitionBy("l_returnflag")
     return li.select(
         "l_orderkey",
         "l_linenumber",
         "l_returnflag",
-        udf(F.col("l_quantity"), F.lit(BIG_K)).over(w).alias("flag_median_qty"),
+        appx_median_bounded("l_quantity", BIG_K).over(w).alias("flag_median_qty"),
     )
 
 

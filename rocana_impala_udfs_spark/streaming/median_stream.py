@@ -5,8 +5,8 @@ The reference's core design property — aggregation state bounded at
 the property Structured Streaming requires of custom stateful operators.
 Two routes:
 
-- :func:`windowed_median_stream` — event-time windows + watermark with the
-  production ``percentile_approx`` path (bounded QuantileSummaries state,
+- :func:`windowed_median_stream` — event-time windows + watermark with
+  Spark's ``percentile_approx`` (bounded QuantileSummaries state,
   fully supported in streaming aggregations). The 100 TB route.
 - :func:`running_median_stream` — ``applyInPandasWithState`` carrying a
   :class:`ReservoirState` across micro-batches per group: init on first

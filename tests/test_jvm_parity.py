@@ -75,15 +75,113 @@ def test_register_jvm_udaf_fails_loudly(spark, monkeypatch, tmp_path):
     naming the class and the jar path, instead of registering nothing."""
     from rocana_impala_udfs_spark import jvm
 
+    monkeypatch.setattr(jvm, "_UDAF_MEMO", {})  # as in a fresh application
     missing = str(tmp_path / "absent.jar")
     monkeypatch.setattr(jvm, "JAR_PATH", missing)
     with pytest.raises(RuntimeError, match="missing") as err:
-        jvm.register_jvm_udaf(spark, name="jvm_udaf_missing_jar")
+        jvm.register_jvm_udafs(spark)
     assert jvm.UDAF_CLASS in str(err.value) and missing in str(err.value)
 
     monkeypatch.setattr(jvm, "JAR_PATH", str(JAR))
-    monkeypatch.setattr(jvm, "UDAF_CLASS", "rocana.spark.udaf.NoSuchAggregator")
+    monkeypatch.setattr(
+        jvm,
+        "FUNCTIONS",
+        {"jvm_udaf_bad_class": ("rocana.spark.udaf.NoSuchAggregator", "value double, k int")},
+    )
     with pytest.raises(RuntimeError, match="NoSuchAggregator") as err:
-        jvm.register_jvm_udaf(spark, name="jvm_udaf_bad_class")
+        jvm.register_jvm_udafs(spark)
     assert str(JAR) in str(err.value)
     assert not spark.catalog.functionExists("jvm_udaf_bad_class")
+
+
+def _aggregator(spark, cls: str):
+    """A fresh instance of a jar class, loaded like registration loads it."""
+    from rocana_impala_udfs_spark import jvm
+
+    jvm.register_jvm_udafs(spark)  # ADD JAR (once per application)
+    loader = spark._jsparkSession.sharedState().jarClassLoader()
+    return spark._jvm.java.lang.Class.forName(cls, True, loader).newInstance()
+
+
+def _row(spark, *vals):
+    arr = spark.sparkContext._gateway.new_array(spark._jvm.java.lang.Object, len(vals))
+    for i, v in enumerate(vals):
+        arr[i] = v
+    return spark._jvm.org.apache.spark.sql.RowFactory.create(arr)
+
+
+def test_jvm_reduce_merge_keep_state_bounded(spark):
+    """The Aggregator's own reduce/merge, driven row by row: a saturated
+    reduce and a merge keep at most k samples, source_size sums, k
+    ratchets up and never down (median.cc:157-162, 242-254), and p is the
+    group's max p, validated on entry."""
+    from pyspark.errors import IllegalArgumentException
+
+    agg = _aggregator(spark, "rocana.spark.udaf.AppxMedianBoundedDouble")
+    a = agg.zero()
+    for i in range(300):
+        a = agg.reduce(a, _row(spark, float(i), 20))
+    assert a.getVals().size() == 20 and a.getSourceSize() == 300
+    a = agg.reduce(a, _row(spark, 300.0, 5))  # a smaller k never shrinks
+    assert a.getMaxSamples() == 20 and a.getVals().size() == 20
+    b = agg.zero()
+    for i in range(200):
+        b = agg.reduce(b, _row(spark, float(i), 30))
+    assert b.getVals().size() == 30
+    merged = agg.merge(a, b)
+    assert merged.getMaxSamples() == 30  # the larger k wins
+    assert merged.getVals().size() == 30 and merged.getKeys().size() == 30
+    assert merged.getSourceSize() == 301 + 200
+    assert 0.0 <= agg.finish(merged) <= 299.0
+
+    # unsaturated: p is the max non-null p and picks sorted[floor(n*p)]
+    c = agg.zero()
+    for i in range(101):
+        c = agg.reduce(c, _row(spark, float(i), None if i == 0 else 0.1, 200))
+    c = agg.reduce(c, _row(spark, None, 0.9, 200))
+    assert c.getSourceSize() == 101 and agg.finish(c) == 90.0
+
+    for bad in (1.5, -0.1, float("nan")):
+        with pytest.raises(IllegalArgumentException, match="percentile p must be in"):
+            agg.reduce(agg.zero(), _row(spark, 1.0, bad, 10))
+    with pytest.raises(IllegalArgumentException, match="max_samples must be positive"):
+        agg.reduce(agg.zero(), _row(spark, 1.0, 0))
+
+
+def test_operators_need_no_registration_and_build_without_jobs(spark, monkeypatch):
+    """The DataFrame aggregates call the JVM function directly: they work
+    in a session where register_all never ran, and building one submits
+    no job and issues no ADD JAR."""
+    from rocana_impala_udfs_spark.operators.reservoir import (
+        appx_median_bounded_agg,
+        appx_percentile_bounded_agg,
+    )
+
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists("appx_median_bounded_double")
+    df = fresh.createDataFrame([(float(i), i % 2) for i in range(11)], "x double, g int")
+    statements = []
+    real_sql = type(fresh).sql
+    monkeypatch.setattr(
+        type(fresh),
+        "sql",
+        lambda self, q, *a, **kw: statements.append(q) or real_sql(self, q, *a, **kw),
+    )
+
+    def build():
+        return (
+            appx_median_bounded_agg(df, "x", 100, ["g"]),
+            appx_percentile_bounded_agg(df, "x", 0.9, 100, out="p90"),
+        )
+
+    sc = fresh.sparkContext
+    sc.setJobGroup("operator-build", "operator-build", False)
+    try:
+        med, p90 = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("operator-build")) == []
+    assert not any("ADD JAR" in q.upper() for q in statements), statements
+    assert {r.g: r.median for r in med.collect()} == {0: 6.0, 1: 5.0}
+    assert p90.collect()[0].p90 == 9.0

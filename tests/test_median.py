@@ -18,17 +18,12 @@ ABS = 1e-5  # FuzzyCompare tolerance, median-test.cc:32-36
 
 
 def test_empty_input_is_null_sql(spark):
-    # Known Spark divergence: a *global* pandas-UDAF over an empty relation
-    # yields zero rows (AggregateInPandas emits nothing), where the reference
-    # host engine yields one NULL row (median.cc:295-298). The operator path
-    # (next test) restores reference semantics. Grouped queries are
-    # unaffected (no groups => no rows in both engines).
     df = spark.createDataFrame([], "x double")
     df.createOrReplaceTempView("empty_doubles")
     out = spark.sql(
         "SELECT CAST(appx_median_bounded(x, 10) AS DOUBLE) AS m FROM empty_doubles"
     ).collect()
-    assert out == [] or out[0].m is None
+    assert len(out) == 1 and out[0].m is None
 
 
 def test_empty_input_is_null_operator(spark):
@@ -88,45 +83,37 @@ def test_all_null_is_null(spark):
 
 
 def test_nan_parity_python_vs_jvm_udaf(spark):
-    """r10 NaN-divergence closure (VERDICT r9 #3): the Python UDAF now
-    receives pyarrow Arrays whose validity bitmap distinguishes SQL NULL
-    from NaN data, so — exactly like the reference (median.cc:130-131
-    skips only is_null) and the JVM path (AppxMedianBounded.java, NaN
-    sampled under Double.compare's total order, sorts last) — NULLs are
-    skipped and NaN is SAMPLED. Both registered paths must agree on
-    NaN-bearing input; the pre-r10 pandas path returned 2.0 here (NaN
-    silently dropped)."""
+    """NULLs are skipped and NaN data is SAMPLED, exactly like the
+    reference (median.cc:130-131 skips only is_null), on every registered
+    name and on the DataFrame operator. Double.compare's total order sorts
+    NaN last; a path that dropped NaN would return 2.0 on the first input
+    and 1.0 on the second."""
     import math
 
+    calls = {
+        "appx_median_bounded": "CAST(appx_median_bounded(x, 100) AS DOUBLE)",
+        "appx_median_bounded_1call": "CAST(appx_median_bounded_1call(x, 100) AS DOUBLE)",
+        "appx_median_bounded_ref_format": (
+            "CAST(appx_median_bounded_ref_format(x, 100) AS DOUBLE)"
+        ),
+        "appx_median_bounded_double": "appx_median_bounded_double(x, 100)",
+        "appx_percentile_bounded": "appx_percentile_bounded(x, 0.5, 100)",
+    }
     rows = [(1.0,), (2.0,), (float("nan"),), (3.0,), (None,)]
-    spark.createDataFrame(rows, "x double").createOrReplaceTempView("_nan_parity")
-    py = spark.sql(
-        "SELECT CAST(appx_median_bounded(x, 100) AS DOUBLE) AS m FROM _nan_parity"
-    ).collect()[0].m
-    jvm = spark.sql(
-        "SELECT CAST(appx_median_bounded_1call(x, 100) AS DOUBLE) AS m FROM _nan_parity"
-    ).collect()[0].m
-    # upper median of [1, 2, 3, NaN] under the total order: index 4//2 = 2
-    assert py == 3.0 and jvm == 3.0
-    # NaN lands AS the median when the total order puts it at n // 2
-    spark.createDataFrame([(1.0,), (float("nan"),)], "x double").createOrReplaceTempView(
-        "_nan_median"
-    )
-    py2 = spark.sql(
-        "SELECT CAST(appx_median_bounded(x, 100) AS DOUBLE) AS m FROM _nan_median"
-    ).collect()[0].m
-    jvm2 = spark.sql(
-        "SELECT CAST(appx_median_bounded_1call(x, 100) AS DOUBLE) AS m FROM _nan_median"
-    ).collect()[0].m
-    assert math.isnan(py2) and math.isnan(jvm2)
-    # and the TWO-PHASE operator path (reservoir_partials carries an
-    # explicit null flag across mapInPandas since the r10 review pass) —
-    # all three members of the family must agree on NaN-bearing input
-    from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
-
-    df = spark.createDataFrame(rows, "x double")
-    two_phase = appx_median_bounded_agg(df, "x", 100).collect()[0].median
-    assert two_phase == 3.0
+    nan_median = [(1.0,), (float("nan"),)]
+    for data, check in [
+        # upper median of [1, 2, 3, NaN] under the total order: index 4//2 = 2
+        (rows, lambda m: m == 3.0),
+        # NaN lands AS the median when the total order puts it at n // 2
+        (nan_median, math.isnan),
+    ]:
+        df = spark.createDataFrame(data, "x double")
+        df.createOrReplaceTempView("_nan_parity")
+        for name, call in calls.items():
+            m = spark.sql(f"SELECT {call} AS m FROM _nan_parity").collect()[0].m
+            assert check(m), (name, data, m)
+        m = appx_median_bounded_agg(df, "x", 100).collect()[0].median
+        assert check(m), ("appx_median_bounded_agg", data, m)
 
 
 # -- gap: even-count upper median, no interpolation (median.cc:301) ---------
@@ -319,9 +306,9 @@ def test_truncated_median_uses_prefix_order(spark):
 
 
 def test_string_return_full_precision_round_trip(spark):
-    # repr() round-trips the double exactly; the reference's stringstream
-    # would emit only 6 significant digits. Divergence is documented in
-    # make_appx_median_bounded_str_udf; CAST-back must be lossless.
+    # Double.toString round-trips the double exactly; the reference's
+    # stringstream would emit only 6 significant digits (that form is
+    # appx_median_bounded_ref_format). CAST-back must be lossless.
     df = spark.createDataFrame([(51504.36,), (51504.36,), (51504.36,)], "x double")
     df.createOrReplaceTempView("_prec3")
     row = spark.sql("SELECT CAST(appx_median_bounded(x, 10) AS DOUBLE) AS m FROM _prec3").collect()[0]
@@ -329,17 +316,27 @@ def test_string_return_full_precision_round_trip(spark):
 
 
 def test_string_return_cpp_stringstream_parity(spark):
-    # cpp_format=True pins byte parity with the reference's ToStringVal
-    # (median.cc:29-37): stringstream default precision(6) == C %g with 6
-    # significant digits. Cases cover integral ("500"), rounded to 6 sig
-    # digits ("51504.4"), and scientific switchover ("1e+07").
-    for val, expect in [(500.0, "500"), (51504.36, "51504.4"), (1e7, "1e+07")]:
-        df = spark.createDataFrame([(val,)] * 3, "x double")
-        df.createOrReplaceTempView("_cppfmt")
-        row = spark.sql(
-            "SELECT appx_median_bounded_ref_format(x, 10) AS s FROM _cppfmt"
-        ).collect()[0]
-        assert row.s == expect, (val, row.s)
+    # appx_median_bounded_ref_format pins byte parity with the reference's
+    # ToStringVal (median.cc:29-37): stringstream default precision(6) ==
+    # C %g with 6 significant digits, which Python's "%.6g" implements.
+    # Hand-pinned cases cover integral ("500"), rounded to 6 sig digits
+    # ("51504.4"), and scientific switchover ("1e+07"); the rest check
+    # zero, sign, both exponent switchovers and a two-digit exponent
+    # against the "%.6g" oracle.
+    pinned = {500.0: "500", 51504.36: "51504.4", 1e7: "1e+07"}
+    vals = [0.0, -3.25, 1e-5, 0.0001234, 500.0, 51504.36, 123456.0, 1234567.0, 1e7, 1e16]
+    spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals) for _ in range(3)], "i int, x double"
+    ).createOrReplaceTempView("_cppfmt")
+    got = {
+        r.i: r.s
+        for r in spark.sql(
+            "SELECT i, appx_median_bounded_ref_format(x, 10) AS s FROM _cppfmt GROUP BY i"
+        ).collect()
+    }
+    for i, v in enumerate(vals):
+        assert got[i] == "%.6g" % v, (v, got[i])
+    assert {v: got[vals.index(v)] for v in pinned} == pinned
 
 
 def test_percentile_generalization_p50_equals_median(spark):
@@ -435,56 +432,6 @@ def test_weighted_quantile_library_matches_expansion(spark):
         exact_weighted_quantile(df, "x", "w", 5, 4, ["g"])
 
 
-def test_twophase_sql_unsaturated_exact(spark):
-    """Salted partial + merge recovers the exact upper median when every
-    reservoir is unsaturated — the scalable SQL idiom from register.py."""
-    spark.range(0, 1001).selectExpr(
-        "CAST(id AS DOUBLE) AS x", "id AS rid"
-    ).createOrReplaceTempView("_tp_n")
-    row = spark.sql(
-        """WITH p AS (
-               SELECT reservoir_partial(x, 10000) AS s
-               FROM _tp_n GROUP BY pmod(hash(rid), 8)
-           )
-           SELECT reservoir_merge_median(s) AS v FROM p"""
-    ).collect()[0]
-    assert row.v == 500.0  # median-test.cc:75-78: 0..1000 => 500
-
-
-def test_twophase_merge_bounds_state(spark):
-    """Saturated case: merged state stays bounded at max_samples and the
-    result lands near the true median (statistical, seeded)."""
-    from rocana_impala_udfs_spark.functions.median import (
-        ReservoirState,
-        deserialize_reservoir_state,
-        serialize_reservoir_state,
-    )
-
-    import numpy as np
-
-    rng = np.random.default_rng(1)
-    partials = []
-    for pid in range(8):
-        st = ReservoirState(200, seed=100 + pid)
-        st.update(rng.permutation(100_000).astype(np.float64))
-        partials.append(serialize_reservoir_state(st))
-    merged = deserialize_reservoir_state(partials[0])
-    for flat in partials[1:]:
-        merged.merge(deserialize_reservoir_state(flat))
-    assert merged.vals.size <= 200
-    assert merged.source_size == 8 * 100_000
-    assert 40_000 <= merged.finalize() <= 60_000
-
-
-def test_twophase_empty_group_is_null(spark):
-    spark.sql("SELECT CAST(NULL AS DOUBLE) AS x, 1 AS rid WHERE 1=0").createOrReplaceTempView("_tp_e")
-    row = spark.sql(
-        """WITH p AS (SELECT reservoir_partial(x, 100) AS s FROM _tp_e GROUP BY rid)
-           SELECT reservoir_merge_median(s) AS v FROM p"""
-    ).collect()
-    assert row == [] or row[0].v is None
-
-
 def test_exact_kth_selection_properties(spark):
     """Histogram-narrowing selection equals a full sort's answer for many
     k values, with duplicates and a forced multi-round path (tiny
@@ -509,22 +456,6 @@ def test_exact_kth_selection_properties(spark):
 
     with _pt.raises(ValueError):
         exact_kth_value(df, "x", k=0)
-
-
-def test_twophase_sql_saturated_statistical(spark):
-    """The SQL route's saturated regime: k far below the group size still
-    lands near the true median (the reservoir's statistical contract),
-    and the result is reproducible within a session (fixed seeds)."""
-    spark.range(0, 20_000).selectExpr(
-        "CAST(id AS DOUBLE) AS x", "id AS rid"
-    ).createOrReplaceTempView("_tp_sat")
-    sql = """WITH p AS (
-                 SELECT reservoir_partial(x, 400) AS s
-                 FROM _tp_sat GROUP BY pmod(hash(rid), 8)
-             )
-             SELECT reservoir_merge_median(s) AS v FROM p"""
-    a = spark.sql(sql).collect()[0].v
-    assert 8000 <= a <= 12000, a  # true median 10000; 400×8 samples
 
 
 def test_jvm_onecall_udaf_reference_cases(spark):
@@ -566,7 +497,7 @@ def test_jvm_onecall_udaf_reference_cases(spark):
 def test_jvm_onecall_udaf_saturated_statistical(spark):
     """Saturated regime (k << n): the sampled median lands inside the
     central band of the distribution — the reservoir's statistical
-    contract, same bar as the two-phase SQL route."""
+    contract, same bar as test_saturated_statistical."""
     from rocana_impala_udfs_spark import register_all
 
     register_all(spark)

@@ -196,6 +196,46 @@ def test_plans_md_not_stale():
     )
 
 
+RESERVOIR_KEYS = (
+    "appx_median_price_global",
+    "appx_median_price_by_returnflag",
+    "appx_median_totalprice_by_status",
+    "appx_median_value_by_event_type",
+    "appx_median_value_by_day",
+    "appx_median_sql_udaf",
+    "appx_median_sql_twophase",
+    "appx_p90_value_by_event_type",
+    "appx_percentile_sql_udaf",
+    "ops_daily_digest",
+)
+PYTHON_EXEC_NODES = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "ArrowAggregatePython",
+    "AggregateInPandas",
+    "ArrowWindowPython",
+    "WindowInPandas",
+)
+
+
+def test_reservoir_keys_run_on_jvm_partial_final_aggregate(spark):
+    """Every batch median/percentile key runs the JVM Aggregator: no
+    Python exec node anywhere in its plan, and the reservoir aggregate
+    split into a partial and a final ObjectHashAggregate (the windowed
+    median instead evaluates it in a Window node)."""
+    for name in RESERVOIR_KEYS + ("window_median_quantity",):
+        plan = _plan(spark, name)
+        assert not [n for n in PYTHON_EXEC_NODES if n in plan], (name, plan)
+        aggs = [ln for ln in plan.splitlines() if "ObjectHashAggregate(" in ln]
+        partial = [ln for ln in aggs if "partial_appx_" in ln]
+        final = [ln for ln in aggs if "appx_" in ln and "partial_appx_" not in ln]
+        if name == "window_median_quantity":
+            assert not aggs, (name, plan)
+            assert re.search(r"Window \[appx_median_bounded_double\(", plan), (name, plan)
+        else:
+            assert partial and final, (name, plan)
+
+
 def test_entry_contract_consistency():
     """Every oracle key must have a matching queries() entry (driver pairs
     them by key), and keys are unique, non-empty strings."""

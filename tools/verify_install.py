@@ -44,14 +44,11 @@ from rocana_impala_udfs_spark.register import register_all
 spark = get_spark("verify-install")
 register_all(spark)
 spark.range(0, 101).selectExpr("CAST(id AS DOUBLE) AS x").createOrReplaceTempView("numbers")
-# two statements: Spark cannot mix a grouped-agg pandas UDF with a
-# non-pandas aggregate (the JVM UDAF) in one Aggregate node
-m = spark.sql(
-    "SELECT CAST(appx_median_bounded(x, 200) AS DOUBLE) AS m FROM numbers"
-).collect()[0].m
-m1 = spark.sql(
-    "SELECT CAST(appx_median_bounded_1call(x, 200) AS DOUBLE) AS m1 FROM numbers"
-).collect()[0].m1
+row = spark.sql(
+    "SELECT CAST(appx_median_bounded(x, 200) AS DOUBLE) AS m,"
+    " CAST(appx_median_bounded_1call(x, 200) AS DOUBLE) AS m1 FROM numbers"
+).collect()[0]
+m, m1 = row.m, row.m1
 assert m == 50.0 and m1 == 50.0, (m, m1)
 print("INSTALLED-PACKAGE CHECK OK:", pkg_dir)
 """
