@@ -1,4 +1,4 @@
-"""The package's one batch implementation of the reference's UDA: a JVM
+"""The package's one implementation of the reference's UDA: a JVM
 ``Aggregator``.
 
 The reference's DDL surface is a single call — ``SELECT
@@ -7,15 +7,18 @@ genuine partial aggregation inside the engine. PySpark cannot express a
 partial-aggregating custom UDAF in Python (grouped-agg pandas UDFs ship
 whole groups to one worker), so the five-phase protocol of ``median.cc``
 lives in Java: ``ReservoirAggregator`` (``jvm/src/rocana/spark/udaf/``)
-holds the one reduce/merge/pick, and three thin subclasses render the
-picked sample as ``Double.toString`` text, as C ``%g`` text, or as a
-DOUBLE. It is built with the plain JDK toolchain
-(``tools/build_jvm_udaf.sh``) into the committed ``rocana-udaf.jar``.
+holds the one reduce/merge/pick, and thin subclasses render the picked
+sample as ``Double.toString`` text, as C ``%g`` text, or as a DOUBLE, or
+return the whole sorted sample as ARRAY<DOUBLE> (``ReservoirSample``). It
+is built with the plain JDK toolchain (``tools/build_jvm_udaf.sh``) into
+the committed ``rocana-udaf.jar``.
 
-Every batch median and percentile surface calls it: the SQL names in
-:data:`FUNCTIONS` (registered by ``register_all``) and the DataFrame
-functions in ``functions/median.py`` and ``operators/reservoir.py``, which
-use :func:`udaf_column` and need no catalog registration.
+Every reservoir surface calls it: the SQL names in :data:`FUNCTIONS`
+(registered by ``register_all``), the DataFrame functions in
+``functions/median.py`` and ``operators/reservoir.py``, and the running
+stream median in ``streaming/median_stream.py``, whose Structured
+Streaming state is the Aggregator buffer. These use :func:`udaf_column`
+and need no catalog registration.
 
 Loading works against a SparkSession the package did not create (a host
 application's): ``ADD JAR`` puts the jar on the shared jar classloader
@@ -55,6 +58,7 @@ FUNCTIONS = {
         _PKG + "AppxMedianBoundedDouble",
         "value double, p double, k int",
     ),
+    "reservoir_sample": (_PKG + "ReservoirSample", _MEDIAN_INPUT),
 }
 
 # (applicationId, jar) -> {SQL name: JVM UserDefinedFunction}

@@ -1,7 +1,7 @@
 package rocana.spark.udaf;
 
 import java.util.ArrayList;
-import java.util.Collections;
+import java.util.Arrays;
 import java.util.List;
 import java.util.concurrent.ThreadLocalRandom;
 import org.apache.spark.sql.Encoder;
@@ -11,16 +11,19 @@ import org.apache.spark.sql.expressions.Aggregator;
 
 /**
  * The reference's bounded-memory reservoir aggregate as a typed
- * {@code Aggregator}: the package's one batch implementation of
- * appx_median_bounded and its percentile generalization. Spark runs
- * reduce/merge inside ObjectHashAggregate with a real partial/final split,
- * so each task reduces its rows to one buffer of at most k samples and only
- * buffers cross the exchange — the wire shape of the reference's Impala UDA.
+ * {@code Aggregator}: the package's one implementation of
+ * appx_median_bounded, its percentile generalization and reservoir_sample.
+ * Spark runs reduce/merge inside ObjectHashAggregate with a real
+ * partial/final split, so each task reduces its rows to one buffer of at
+ * most k samples and only buffers cross the exchange — the wire shape of
+ * the reference's Impala UDA. In a streaming aggregation the buffer is the
+ * state-store row, and merge combines it with each trigger's partial.
  *
  * Input rows are {@code (value DOUBLE, k INT)} or
  * {@code (value DOUBLE, p DOUBLE, k INT)}; the registered input schema
  * decides which. Subclasses differ only in how {@link #output} renders the
- * picked sample and in {@link #outputEncoder}.
+ * picked sample (or, for {@link ReservoirSample}, in {@link #finish}) and
+ * in {@link #outputEncoder}.
  *
  * Faithful to the reference phase by phase:
  *  - reduce  = ReservoirSampleUpdate: NULL skip, Algorithm R with
@@ -136,7 +139,7 @@ public abstract class ReservoirAggregator<OUT> extends Aggregator<Row, Reservoir
       for (int i = 0; i < idx.length; i++) {
         idx[i] = i;
       }
-      java.util.Arrays.sort(
+      Arrays.sort(
           idx, (x, y) -> Double.compare(allKeys.get(y), allKeys.get(x)));
       List<Double> nv = new ArrayList<>(k);
       List<Double> nk = new ArrayList<>(k);
@@ -158,17 +161,30 @@ public abstract class ReservoirAggregator<OUT> extends Aggregator<Row, Reservoir
 
   @Override
   public OUT finish(ReservoirBuf b) {
-    List<Double> vals = b.getVals();
-    if (vals.isEmpty()) {
+    double[] sorted = sortedSample(b);
+    if (sorted == null) {
       return null; // empty => NULL, median.cc:295-298
     }
-    List<Double> sorted = new ArrayList<>(vals);
-    Collections.sort(sorted);
-    int n = sorted.size();
+    int n = sorted.length;
     double p = b.getP() < 0 ? 0.5 : b.getP();
     // p=0.5 gives n/2, the upper median (median.cc:299-301)
     int at = (int) Math.min((long) Math.floor(n * p), n - 1);
-    return output(sorted.get(at));
+    return output(sorted[at]);
+  }
+
+  /** The sample sorted by {@code Double.compare} (NaN above +Inf), or
+   * null when no non-null value was seen. */
+  protected static double[] sortedSample(ReservoirBuf b) {
+    List<Double> vals = b.getVals();
+    if (vals.isEmpty()) {
+      return null;
+    }
+    double[] sorted = new double[vals.size()];
+    for (int i = 0; i < sorted.length; i++) {
+      sorted[i] = vals.get(i);
+    }
+    Arrays.sort(sorted);
+    return sorted;
   }
 
   @Override

@@ -1721,14 +1721,17 @@ ORDER BY s.user_id, s.session_start_us
 
 
 def q_stream_tws_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE REFERENCE'S OWN AGGREGATE, STREAMING, DRIVER-CHECKED (r11) —
-    the bounded reservoir median (``median.cc``'s five-phase UDA) carried
-    across micro-batches in a tws ``ValueState``: init on first batch
-    (median.cc:117), update per batch (median.cc:128), the persisted state
-    IS the serialized reservoir (median.cc:165-194), finalize emitted per
-    trigger (median.cc:284-304). Closes the one gap in the streaming
-    surface: every OTHER stateful shape was driver-checked but the
-    flagship UDA itself was only pytest-pinned on the stream.
+    """THE REFERENCE'S OWN AGGREGATE, STREAMING, DRIVER-CHECKED — the
+    bounded reservoir median (``median.cc``'s five-phase UDA) carried
+    across micro-batches by ``running_median_stream``: the JVM Aggregator
+    as a native state-store aggregation whose persisted state IS the
+    reservoir buffer (median.cc:165-194), merged into each trigger's
+    partial (median.cc:228-282), finalize emitted per trigger
+    (median.cc:284-304).
+
+    The key once ran a ``transformWithStateInPandas`` twin and keeps its
+    name because the oracle and the correctness history are filed under
+    it; no tws operator runs here now.
 
     Exact regime: max_samples=1,000,000 exceeds every per-type count at
     every harness SF (≤ ~20.3k at sf0.1; ~200k at the derived sf1x sweep),
@@ -1736,35 +1739,17 @@ def q_stream_tws_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper median — the same deterministic
     contract the batch ``appx_median_*`` keys certify, with bounded state
     still structurally enforced (the reference's design property).
-    Final answer per group = its max-``source_size`` emission (monotone).
-
-    Probe-gated fallback: the applyInPandasWithState twin
-    (``running_median_stream``), pinned value-identical in
-    tests/test_streaming.py::test_running_median_transform_with_state."""
-    from rocana_impala_udfs_spark.streaming.median_stream import (
-        running_median_stream,
-        running_median_tws,
-    )
+    Final answer per group = its max-``source_size`` emission (monotone)."""
+    from rocana_impala_udfs_spark.streaming.median_stream import running_median_stream
     from rocana_impala_udfs_spark.streaming.replay import (
         replay_events_stream,
         run_to_table,
     )
-    from rocana_impala_udfs_spark.vendor.pbshim import ensure_protobuf
 
     stream, _d = replay_events_stream(spark, sf_dir)  # memoized
-    if not ensure_protobuf() or not _workers_can_import_protobuf(spark):
-        sink = run_to_table(
-            running_median_stream(stream, max_samples=1_000_000), mode="update"
-        )
-    else:
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_median_tws(stream, max_samples=1_000_000),
-                mode="update",
-                capture_plan=TWS_EXECUTED_PLANS,
-            ),
-        )
+    sink = run_to_table(
+        running_median_stream(stream, max_samples=1_000_000), mode="update"
+    )
     mx = sink.groupBy(F.col("group").alias("g")).agg(
         F.max("source_size").alias("mx")
     )

@@ -7,7 +7,7 @@ DDL; here one call registers every function:
     register_all(spark)
     spark.sql("SELECT CAST(appx_median_bounded(x, 5) AS DOUBLE) FROM numbers")
 
-The median and percentile names are one JVM ``Aggregator``
+The median, percentile and sample names are one JVM ``Aggregator``
 (``jvm/rocana-udaf.jar``) with genuine partial+final aggregation, so a
 single call scales like the reference's Impala UDA:
 
@@ -17,18 +17,18 @@ single call scales like the reference's Impala UDA:
 - ``appx_median_bounded_ref_format(x, k)`` — STRING formatted like the
   reference's ``ToStringVal`` (stringstream precision 6, ``median.cc:29-37``);
 - ``appx_median_bounded_double(x, k)`` — the idiomatic typed variant;
-- ``appx_percentile_bounded(x, p, k)`` — any percentile, DOUBLE.
+- ``appx_percentile_bounded(x, p, k)`` — any percentile, DOUBLE;
+- ``reservoir_sample(x, k)`` — the bounded sample itself, sorted
+  ARRAY<DOUBLE>.
 
 Registration raises ``RuntimeError`` (class + jar path) if the jar is
-missing or fails to load. ``reservoir_sample`` and the text functions and
-UDTFs are Python, shipped to executors over the Arrow/py4j worker protocol.
+missing or fails to load. The text functions and UDTFs are Python,
+shipped to executors over the Arrow/py4j worker protocol.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-
-from rocana_impala_udfs_spark.functions.median import make_reservoir_sample_udf
 
 
 def register_all(spark: SparkSession) -> SparkSession:
@@ -38,7 +38,6 @@ def register_all(spark: SparkSession) -> SparkSession:
     from rocana_impala_udfs_spark.jvm import register_jvm_udafs
 
     register_jvm_udafs(spark)
-    spark.udf.register("reservoir_sample", make_reservoir_sample_udf())
     text_fns.register(spark)
     udtfs.register(spark)
     return spark

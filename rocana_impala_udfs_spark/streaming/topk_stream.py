@@ -109,9 +109,10 @@ def running_grouped_topk_tws(
     identical top-k tables; the test pins that against the
     ``applyInPandasWithState`` path AND the batch salted operator.
 
-    Same runtime requirements as ``running_median_tws``: the RocksDB
-    state-store provider and ``google.protobuf`` for the tws Python
-    driver worker — the test skips where the environment lacks them."""
+    Runtime requirements beyond the ``applyInPandasWithState`` path: the
+    RocksDB state-store provider and ``google.protobuf`` for the tws
+    Python driver worker — the test skips where the environment lacks
+    them."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,

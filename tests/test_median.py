@@ -8,7 +8,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from rocana_impala_udfs_spark.functions.median import ReservoirState, exact_upper_median
+from reservoir_spec import ReservoirState
+
+from rocana_impala_udfs_spark.functions.median import exact_upper_median
 from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
 
 ABS = 1e-5  # FuzzyCompare tolerance, median-test.cc:32-36
@@ -227,8 +229,42 @@ def test_reservoir_sample_agg_saturated_bounded(spark):
     df = spark.createDataFrame([(float(i),) for i in range(1000)], "x double").repartition(4)
     out = reservoir_sample_agg(df, "x", 50, None).collect()[0].samples
     assert len(out) == 50  # state bounded at max_samples across partials
-    assert all(0.0 <= v <= 999.0 for v in out)
+    assert set(out) <= {float(i) for i in range(1000)}  # members of the input
     assert len(set(out)) == 50  # samples drawn without replacement
+
+
+def test_reservoir_sample_global_empty_is_one_null_row(spark):
+    from rocana_impala_udfs_spark.operators.reservoir import reservoir_sample_agg
+
+    out = reservoir_sample_agg(spark.createDataFrame([], "x double"), "x", 10).collect()
+    assert len(out) == 1 and out[0].samples is None
+
+
+def test_reservoir_sample_agg_keeps_group_key_type(spark):
+    from rocana_impala_udfs_spark.operators.reservoir import reservoir_sample_agg
+
+    df = spark.createDataFrame([(1, 2.0), (1, 1.0), (20, 3.0)], "g int, x double")
+    out = reservoir_sample_agg(df, "x", 10, ["g"])
+    assert out.schema["g"].dataType.simpleString() == "int"
+    assert out.schema["samples"].dataType.simpleString() == "array<double>"
+    assert {r.g: r.samples for r in out.collect()} == {1: [1.0, 2.0], 20: [3.0]}
+
+
+def test_reservoir_sample_samples_nan_skips_null_in_double_compare_order(spark):
+    """NULL is skipped (median.cc:130); NaN is a value, and the sample is
+    sorted by Double.compare: -Inf < -0.0 < 0.0 < ... < +Inf < NaN."""
+    import math
+
+    df = spark.createDataFrame(
+        [(float("nan"),), (None,), (0.0,), (float("inf"),), (-0.0,), (float("-inf"),), (None,)],
+        "x double",
+    ).repartition(3)
+    df.createOrReplaceTempView("nan_null")
+    s = spark.sql("SELECT reservoir_sample(x, 10) AS s FROM nan_null").collect()[0].s
+    assert len(s) == 5
+    assert s[0] == float("-inf") and s[3] == float("inf") and math.isnan(s[4])
+    assert math.copysign(1.0, s[1]) == -1.0 and s[1] == 0.0
+    assert math.copysign(1.0, s[2]) == 1.0 and s[2] == 0.0
 
 
 # -- exact_upper_median relational composition (typed generalization) -------

@@ -207,6 +207,7 @@ RESERVOIR_KEYS = (
     "appx_p90_value_by_event_type",
     "appx_percentile_sql_udaf",
     "ops_daily_digest",
+    "reservoir_sample_quantity",
 )
 PYTHON_EXEC_NODES = (
     "MapInPandas",
@@ -219,16 +220,16 @@ PYTHON_EXEC_NODES = (
 
 
 def test_reservoir_keys_run_on_jvm_partial_final_aggregate(spark):
-    """Every batch median/percentile key runs the JVM Aggregator: no
-    Python exec node anywhere in its plan, and the reservoir aggregate
+    """Every batch median/percentile/sample key runs the JVM Aggregator:
+    no Python exec node anywhere in its plan, and the reservoir aggregate
     split into a partial and a final ObjectHashAggregate (the windowed
     median instead evaluates it in a Window node)."""
     for name in RESERVOIR_KEYS + ("window_median_quantity",):
         plan = _plan(spark, name)
         assert not [n for n in PYTHON_EXEC_NODES if n in plan], (name, plan)
         aggs = [ln for ln in plan.splitlines() if "ObjectHashAggregate(" in ln]
-        partial = [ln for ln in aggs if "partial_appx_" in ln]
-        final = [ln for ln in aggs if "appx_" in ln and "partial_appx_" not in ln]
+        partial = [ln for ln in aggs if re.search(r"partial_(appx_|reservoir_sample)", ln)]
+        final = [ln for ln in aggs if re.search(r"appx_|reservoir_sample", ln) and ln not in partial]
         if name == "window_median_quantity":
             assert not aggs, (name, plan)
             assert re.search(r"Window \[appx_median_bounded_double\(", plan), (name, plan)
@@ -1218,20 +1219,27 @@ def test_tws_warm_start_key_executes_tws_operator(spark):
     ), executed
 
 
-def test_tws_median_key_executes_tws_operator(spark):
-    """stream_tws_median_value must run the genuine tws operator — the
-    reference's reservoir UDA streaming on the successor API, not the
-    applyInPandasWithState fallback."""
-    from rocana_impala_udfs_spark.plans import temporal
+def test_stream_median_key_runs_native_state_store_aggregate(spark, monkeypatch):
+    """stream_tws_median_value runs the reservoir as Structured Streaming's
+    own stateful aggregation over the JVM Aggregator: the executed plan of
+    the key's streaming query has StateStoreSave and no Python stateful
+    operator (the applyInPandasWithState / transformWithState routes are
+    gone)."""
+    from rocana_impala_udfs_spark.streaming import replay
 
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    executed: list = []
+    real = replay.run_to_table
+    monkeypatch.setattr(
+        replay,
+        "run_to_table",
+        lambda out, *a, **kw: real(out, *a, capture_plan=executed, **kw),
+    )
     _plan(spark, "stream_tws_median_value")
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, "fell back"
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
-    assert (
-        "TransformWithStateInPySpark" in executed
-        or "TransformWithStateInPandas" in executed
-    ), executed
+    assert len(executed) == 1, executed
+    plan = executed[0]
+    assert "StateStoreSave" in plan and "StateStoreRestore" in plan, plan
+    assert "appx_median_bounded_double" in plan, plan
+    assert "InPandas" not in plan and "InPySpark" not in plan, plan
 
 
 def test_aqe_skew_join_splits_skewed_partition(spark):

@@ -9,7 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from rocana_impala_udfs_spark.functions.median import ReservoirState
+from reservoir_spec import ReservoirState
 
 finite = st.floats(allow_nan=False, allow_infinity=False, width=64)
 value_lists = st.lists(finite, min_size=0, max_size=400)

@@ -16,6 +16,7 @@ from rocana_impala_udfs_spark.streaming.median_stream import (
 )
 
 SF = "/root/testdata/sf0.001"
+SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture()
@@ -124,6 +125,126 @@ def test_running_median_stream_bounded_state(spark, event_stream_dir):
         assert r.source_size == batch.filter(
             (F.col("event_type") == g) & F.col("value").isNotNull()
         ).count()
+
+
+def test_running_median_stream_saturated_across_triggers(spark):
+    """k=50 over the four-trigger replay of the sf0.01 events (~500 rows
+    per group per trigger): every trigger saturates its partial and merges
+    it into a saturated restored buffer with the key-weighted combine
+    (median.cc:228-282). Each final median must be an input value within
+    perfbench's RankCheck bound (5 sigma of a k-sample median's rank), and
+    the state must stop growing once every cached version is saturated."""
+    import math
+
+    import numpy as np
+
+    from rocana_impala_udfs_spark.streaming.replay import replay_events_stream
+
+    k = 50
+    stream, _d = replay_events_stream(spark, SF_ORACLE)
+    out = running_median_stream(stream, max_samples=k)
+    q = out.writeStream.format("memory").queryName("sat_median").outputMode("update").start()
+    try:
+        q.processAllAvailable()
+        mem = [
+            p["stateOperators"][0]["memoryUsedBytes"]
+            for p in q.recentProgress
+            if p.get("stateOperators")
+        ]
+    finally:
+        q.stop()
+    assert len(mem) >= 4, mem
+    assert max(mem[2:]) <= mem[1], mem  # bounded: no growth after trigger 2
+
+    final = spark.sql(
+        "SELECT group, max_by(median, source_size) AS m, max(source_size) AS n "
+        "FROM sat_median GROUP BY group"
+    ).collect()
+    ev = load_table(spark, SF_ORACLE, "events").filter(F.col("value").isNotNull())
+    by_type = {
+        r.event_type: np.sort(np.asarray(r.xs))
+        for r in ev.groupBy("event_type").agg(F.collect_list("value").alias("xs")).collect()
+    }
+    assert {r.group for r in final} == set(by_type)
+    slack = 5.0 * math.sqrt(0.25 / k)
+    for r in final:
+        vals = by_type[r.group]
+        n = len(vals)
+        assert r.n == n
+        lo = int(np.searchsorted(vals, r.m, "left"))
+        hi = int(np.searchsorted(vals, r.m, "right"))
+        assert hi > lo, (r.group, r.m)  # a member of the input
+        target = n // 2
+        assert hi - 1 >= target - slack * n and lo <= target + slack * n, (r.group, lo, hi, n)
+
+
+def test_running_median_stream_samples_nan_skips_null_like_batch(spark, tmp_path):
+    """The stream median is the batch aggregate: NULL is skipped, NaN is a
+    sampled value that sorts above +Inf, and source_size counts the NaN."""
+    import math
+
+    from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
+
+    rows = [("a", 1.0), ("a", None), ("a", float("nan")), ("b", 2.0)]
+    src = str(tmp_path / "src")
+    for i, chunk in enumerate((rows[:2], rows[2:])):
+        spark.createDataFrame(chunk, "g string, x double").coalesce(1).write.mode(
+            "append" if i else "overwrite"
+        ).parquet(src)
+    stream = spark.readStream.schema("g string, x double").option("maxFilesPerTrigger", 1).parquet(src)
+    _run_stream(running_median_stream(stream, "x", "g", max_samples=10), "nan_median")
+    got = {
+        r.group: (r.m, r.n)
+        for r in spark.sql(
+            "SELECT group, max_by(median, source_size) AS m, max(source_size) AS n "
+            "FROM nan_median GROUP BY group"
+        ).collect()
+    }
+    batch = spark.createDataFrame(rows, "g string, x double")
+    expect = {r.g: r.median for r in appx_median_bounded_agg(batch, "x", 10, ["g"]).collect()}
+    assert math.isnan(got["a"][0]) and math.isnan(expect["a"])  # sorted [1.0, NaN], pick n//2
+    assert got["a"][1] == 2  # the NaN counts, the NULL does not
+    assert got["b"] == (expect["b"], 1)
+
+
+def test_domain_bounded_python_state_keys_declare_python_stateful_false(spark, monkeypatch):
+    """The grouped top-k and bitmap-distinct keys keep Python state over a
+    handful of event types, so they pass python_stateful=False to their
+    runner to keep the 4-partition machinery floor. Every call site, on
+    both sides of the protobuf probe, must keep passing it."""
+    from rocana_impala_udfs_spark.plans import temporal
+    from rocana_impala_udfs_spark.streaming import replay
+    from rocana_impala_udfs_spark.vendor import pbshim
+
+    class Stop(Exception):
+        pass
+
+    seen = []
+
+    def runner(out, *a, **kw):
+        seen.append(kw.get("python_stateful", "missing"))
+        raise Stop
+
+    tws_runs = []
+    monkeypatch.setattr(replay, "run_to_table", runner)
+    monkeypatch.setattr(replay, "run_foreach_batch_merge", runner)
+    monkeypatch.setattr(
+        temporal, "_with_rocksdb_state_store", lambda spark, run: tws_runs.append(1) or run()
+    )
+    monkeypatch.setattr(pbshim, "ensure_protobuf", lambda: True)
+    keys = (
+        temporal.q_stream_topk_events_per_type,
+        temporal.q_stream_topk_events_merge,
+        temporal.q_stream_tws_bitmap_map_state,
+        temporal.q_stream_tws_topk_list_state,
+    )
+    for tws in (False, True):
+        monkeypatch.setattr(temporal, "_workers_can_import_protobuf", lambda spark, tws=tws: tws)
+        for q in keys:
+            with pytest.raises(Stop):
+                q(spark, SF)
+    assert len(tws_runs) == 2  # the tws branch of both probe-gated keys ran
+    assert seen == [False] * 2 * len(keys), seen
 
 
 def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir):
@@ -239,37 +360,6 @@ def test_foreachbatch_append_sink_is_idempotent_on_redelivery(spark):
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_running_median_transform_with_state(spark, event_stream_dir):
-    """transformWithStateInPandas path must equal the applyInPandasWithState
-    path (same reservoir state, same medians)."""
-    # The tws Python driver worker imports google.protobuf; skip where the
-    # container lacks it (the operator itself is a thin port of the
-    # applyInPandasWithState path, which stays fully tested).
-    pytest.importorskip("google.protobuf.descriptor")
-    from rocana_impala_udfs_spark.streaming.median_stream import running_median_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    schema = load_table(spark, SF, "events").schema
-    stream = spark.readStream.schema(schema).parquet(event_stream_dir)
-    out = running_median_tws(stream, max_samples=5000)
-    _run_stream(out, "tws_median")
-    got = {r.group: r for r in spark.sql("SELECT * FROM tws_median").collect()}
-    batch = load_table(spark, SF, "events")
-    from rocana_impala_udfs_spark.operators.reservoir import appx_median_bounded_agg
-
-    expect = {
-        r.event_type: r.median
-        for r in appx_median_bounded_agg(batch, "value", 5000, ["event_type"]).collect()
-    }
-    assert set(got) == set(expect)
-    for g, r in got.items():
-        assert r.median == pytest.approx(expect[g], abs=1e-9)
 
 
 def test_streaming_heavy_hitters_exact_when_unsaturated(spark, event_stream_dir):
