@@ -19,6 +19,8 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from rocana_impala_udfs_spark.sources.io import ensure_parallelism
+
 # ---------------------------------------------------------------------------
 # Pure column expressions (JVM path — preferred)
 # ---------------------------------------------------------------------------
@@ -136,9 +138,7 @@ def repetition_profile(df, text_col: str = "text", id_col: str = "doc_id"):
     a 100 TB scan already has wide parallelism and skips it.)
     Returns ``(id_col, top_word_frac, dup_word_frac, dup_bigram_frac)``.
     """
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() < max(target // 2, 2):
-        df = df.repartition(target)
+    df = ensure_parallelism(df)
     words = F.split(normalize_text(text_col), " ")
     base = df.select(
         F.col(id_col),
@@ -243,10 +243,8 @@ def simhash_fingerprints(
     """
     # widen a narrow (single-file) scan before the explode+hash: the
     # fixture tables are one row group, so without this the whole
-    # fingerprint map side runs in ONE task (r16, guide §2.5; shared
-    # helper since r17 per ADVICE r16 — no-op on a wide production scan)
-    from rocana_impala_udfs_spark.sources.io import ensure_parallelism
-
+    # fingerprint map side runs in ONE task (r16, guide §2.5 — no-op on a
+    # wide production scan)
     df = ensure_parallelism(df)
     toks = df.select(
         F.col(id_col),

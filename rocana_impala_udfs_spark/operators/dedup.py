@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rocana_impala_udfs_spark.functions.text import doc_fingerprint, normalize_text, word_shingles
+from rocana_impala_udfs_spark.sources.io import ensure_parallelism
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -78,7 +79,7 @@ def chunk_dedup_stats(
             lambda i: F.array_join(F.slice(words, i * chunk_words + 1, chunk_words), " "),
         )
     )
-    exploded = _ensure_parallelism(df).select(
+    exploded = ensure_parallelism(df).select(
         F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk")
     )
     win = Window.partitionBy("chunk").orderBy(id_col, "chunk_idx")
@@ -97,19 +98,10 @@ def chunk_dedup_stats(
 # ---------------------------------------------------------------------------
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Small-file inputs arrive as one scan partition, serializing the
-    explode; at 100 TB the scan is already wide and this is a no-op."""
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() < max(target // 2, 2):
-        return df.repartition(target)
-    return df
-
-
 def raw_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """(id, shingle) pairs WITH duplicates — no shuffle, just the explode.
     Sufficient for MinHash (min over a multiset equals min over its set)."""
-    src = _ensure_parallelism(df)
+    src = ensure_parallelism(df)
     return src.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(text_col, k)).alias("shingle")
     )

@@ -29,25 +29,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rocana_impala_udfs_spark.sources.io import ensure_parallelism
+
 MEDIA_SCHEMA = (
     "media_id bigint, modality string, payload binary, "
     "meta_width int, meta_height int, meta_duration_ms int, meta_codec string"
 )
 
 FEATURE_DIM = 32
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Small single-file corpora arrive as ONE scan partition, which would
-    serialize every per-row Python codec kernel downstream onto one core
-    (measured: the whole sf0.1 JPEG suite decoded on 1 of 32 threads). A
-    cheap round-robin repartition of the narrow text rows buys full-cluster
-    parallelism for the expensive encode/decode that follows; at real blob
-    scale the scan is already wide and this is a no-op."""
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() < max(target // 2, 2):
-        return df.repartition(target)
-    return df
 
 
 def synthetic_media(spark: SparkSession, source_df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -100,7 +89,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 {"media_id": pdf["media_id"], "modality": pdf["modality"], "features": feats}
             )
 
-    return _spread(media).mapInPandas(run, schema="media_id bigint, modality string, features array<float>")
+    return ensure_parallelism(media).mapInPandas(run, schema="media_id bigint, modality string, features array<float>")
 
 
 def resize_images(media: DataFrame, width: int = 64, height: int = 64, fake: bool = True) -> DataFrame:
@@ -132,7 +121,7 @@ def resize_images(media: DataFrame, width: int = 64, height: int = 64, fake: boo
                 columns=["media_id", "out_width", "out_height", "resized_md5", "scale_x", "scale_y"],
             )
 
-    return _spread(media).mapInPandas(
+    return ensure_parallelism(media).mapInPandas(
         run,
         schema=(
             "media_id bigint, out_width int, out_height int, "
@@ -169,7 +158,7 @@ def sample_frames(media: DataFrame, num_frames: int = 4, fake: bool = True) -> D
                 rows, columns=["media_id", "frame_idx", "frame_offset_ms", "frame_fingerprint"]
             )
 
-    return _spread(media).mapInPandas(
+    return ensure_parallelism(media).mapInPandas(
         run,
         schema="media_id bigint, frame_idx int, frame_offset_ms int, frame_fingerprint string",
     )
@@ -254,7 +243,7 @@ def ppm_decode_stats(media: DataFrame) -> DataFrame:
                 rows, columns=["media_id", "img_w", "img_h", "mean_r", "mean_g", "mean_b"]
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema="media_id bigint, img_w int, img_h int, mean_r double, mean_g double, mean_b double",
     )
@@ -286,7 +275,7 @@ def ppm_resize_nn(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame
                 rows.append((r.media_id, out_w, out_h, hashlib.md5(encode_ppm(resized)).hexdigest()))
             yield pd.DataFrame(rows, columns=["media_id", "out_w", "out_h", "resized_md5"])
 
-    return _spread(media.select("media_id", "payload")).mapInPandas(
+    return ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, out_w int, out_h int, resized_md5 string"
     )
 
@@ -522,7 +511,7 @@ def synthetic_png_images(
                 rows.append((doc_id, w, h, encode_png(img, interlace=interlace)))
             yield pd.DataFrame(rows, columns=["media_id", "meta_width", "meta_height", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_width int, meta_height int, payload binary"
     )
 
@@ -545,7 +534,7 @@ def png_decode_stats(media: DataFrame) -> DataFrame:
                 rows, columns=["media_id", "img_w", "img_h", "mean_r", "mean_g", "mean_b"]
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema="media_id bigint, img_w int, img_h int, mean_r double, mean_g double, mean_b double",
     )
@@ -581,7 +570,7 @@ def ppm_feature_histogram(media: DataFrame, bins: int = 32) -> DataFrame:
                     rows.append((r.media_id, int(b), float(hist[b] / total)))
             yield pd.DataFrame(rows, columns=["media_id", "bin", "frac"])
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, bin int, frac double"
     )
     return out.select("media_id", "bin", F.round("frac", 6).alias("frac"))
@@ -605,7 +594,7 @@ def ppm_histogram_counts(media: DataFrame, bins: int = 32) -> DataFrame:
                     rows.append((r.media_id, int(b), int(hist[b])))
             yield pd.DataFrame(rows, columns=["media_id", "bin", "cnt"])
 
-    return _spread(media.select("media_id", "payload")).mapInPandas(
+    return ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, bin int, cnt bigint"
     )
 
@@ -1393,7 +1382,7 @@ def jpeg_progressive_stats(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["media_id", "img_w", "img_h", "mean_gray"])
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, img_w int, img_h int, mean_gray double"
     )
     return out.select("media_id", "img_w", "img_h", "mean_gray")
@@ -1430,7 +1419,7 @@ def synthetic_jpeg_images(
                 rows.append((doc_id, wb * 8, hb * 8, enc(img)))
             yield pd.DataFrame(rows, columns=["media_id", "meta_width", "meta_height", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_width int, meta_height int, payload binary"
     )
 
@@ -1449,7 +1438,7 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["media_id", "img_w", "img_h", "mean_gray"])
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, img_w int, img_h int, mean_gray double"
     )
     return out.select("media_id", "img_w", "img_h", "mean_gray")
@@ -1727,7 +1716,7 @@ def synthetic_color_jpeg_images(
                 rows.append((doc_id, wb * 16, hb * 16, encode_jpeg_color_flat(img)))
             yield pd.DataFrame(rows, columns=["media_id", "meta_width", "meta_height", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_width int, meta_height int, payload binary"
     )
 
@@ -1756,7 +1745,7 @@ def jpeg_color_stats(media: DataFrame) -> DataFrame:
                 rows, columns=["media_id", "img_w", "img_h", "mean_r", "mean_g", "mean_b"]
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema="media_id bigint, img_w int, img_h int, mean_r double, mean_g double, mean_b double",
     )
@@ -1825,7 +1814,7 @@ def media_features_real(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["media_id", "container", "features", "mean_px"])
 
-    return _spread(media.select("media_id", "payload")).mapInPandas(
+    return ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema="media_id bigint, container string, features array<float>, mean_px double",
     )
@@ -1904,7 +1893,7 @@ def synthetic_wav_audio(
                 rows.append((doc_id, n, encode_wav(samples.astype(np.int16))))
             yield pd.DataFrame(rows, columns=["media_id", "meta_samples", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_samples int, payload binary"
     )
 
@@ -1936,7 +1925,7 @@ def wav_decode_stats(media: DataFrame) -> DataFrame:
                 columns=["media_id", "sample_rate", "n_samples", "duration_ms", "mean_amp", "rms"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, sample_rate int, n_samples int, "
@@ -2004,7 +1993,7 @@ def wav_downsample_stats(media: DataFrame, factor: int = 4) -> DataFrame:
                 columns=["media_id", "n_in", "n_out", "out_rate", "mean_amp", "rms"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, n_in int, n_out int, out_rate int, "
@@ -2109,7 +2098,7 @@ def synthetic_y4m_videos(
                 rows, columns=["media_id", "meta_frames", "meta_width", "meta_height", "payload"]
             )
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run,
         schema="media_id bigint, meta_frames int, meta_width int, meta_height int, payload binary",
     )
@@ -2146,7 +2135,7 @@ def y4m_frame_sample(media: DataFrame, num_frames: int = 2) -> DataFrame:
                 columns=["media_id", "sample_idx", "frame_no", "n_frames", "mean_y", "mean_u", "mean_v"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, sample_idx int, frame_no int, n_frames int, "
@@ -2187,7 +2176,7 @@ def y4m_scene_cuts(media: DataFrame, threshold: float = 32.0) -> DataFrame:
                 columns=["media_id", "frame_a", "frame_b", "n_frames", "y_diff"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema="media_id bigint, frame_a int, frame_b int, n_frames int, y_diff double",
     )
@@ -2370,7 +2359,7 @@ def synthetic_adpcm_audio(
                 rows.append((doc_id, n, encode_adpcm_ima(samples.astype(np.int16))))
             yield pd.DataFrame(rows, columns=["media_id", "meta_samples", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_samples int, payload binary"
     )
 
@@ -2402,7 +2391,7 @@ def adpcm_decode_stats(media: DataFrame) -> DataFrame:
                 columns=["media_id", "n_samples", "sample_rate", "mean_dec", "rms_dec", "max_step_idx"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, n_samples int, sample_rate int, "
@@ -2517,7 +2506,7 @@ def synthetic_ac_refine_jpegs(
                 )
             yield pd.DataFrame(rows, columns=["media_id", "meta_width", "meta_height", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_width int, meta_height int, payload binary"
     )
 
@@ -2550,7 +2539,7 @@ def jpeg_ac_refine_stats(media: DataFrame) -> DataFrame:
                 columns=["media_id", "img_w", "img_h", "n_blocks", "sum_dc", "n_nonzero_ac", "sum_abs_ac"],
             )
 
-    return _spread(media.select("media_id", "payload")).mapInPandas(
+    return ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, img_w int, img_h int, n_blocks bigint, "
@@ -2734,7 +2723,7 @@ def synthetic_gif_images(
                 rows.append((doc_id, w, h, encode_gif_gray(img)))
             yield pd.DataFrame(rows, columns=["media_id", "meta_width", "meta_height", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_width int, meta_height int, payload binary"
     )
 
@@ -2765,7 +2754,7 @@ def gif_decode_stats(media: DataFrame) -> DataFrame:
                 columns=["media_id", "img_w", "img_h", "mean_px", "n_levels", "payload_bytes"],
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, img_w int, img_h int, mean_px double, "
@@ -2842,7 +2831,7 @@ def wav_samples(media: DataFrame) -> DataFrame:
                 columns=["media_id", "i", "sample"]
             )
 
-    return _spread(media.select("media_id", "payload")).mapInPandas(
+    return ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run, schema="media_id bigint, i bigint, sample bigint"
     )
 
@@ -3124,7 +3113,7 @@ def synthetic_flac_audio(
                 rows.append((doc_id, n, encode_flac(samples.astype(np.int16))))
             yield pd.DataFrame(rows, columns=["media_id", "meta_samples", "payload"])
 
-    return _spread(source_df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallelism(source_df.select(id_col, text_col)).mapInPandas(
         run, schema="media_id bigint, meta_samples int, payload binary"
     )
 
@@ -3153,7 +3142,7 @@ def flac_decode_stats(media: DataFrame) -> DataFrame:
                 rows, columns=["media_id", "sample_rate", "n_samples", "mean_amp", "rms"]
             )
 
-    out = _spread(media.select("media_id", "payload")).mapInPandas(
+    out = ensure_parallelism(media.select("media_id", "payload")).mapInPandas(
         run,
         schema=(
             "media_id bigint, sample_rate int, n_samples int, "

@@ -1338,18 +1338,6 @@ def _workers_can_import_protobuf(spark: SparkSession) -> bool:
 
 _PB_WORKER_PROBE: dict = {}
 
-# executed physical plans captured from the tws driver key (newest last);
-# tests/test_plans.py pins that the key really ran
-# TransformWithStateInPandasExec, not the fallback twin.
-TWS_EXECUTED_PLANS: list = []
-
-# last StreamingQueryProgress of tws driver-key runs (newest last);
-# tests/test_plans.py pins the rocksdb* customMetrics — proof the state
-# really lived in the RocksDB provider (the only provider tws can run on
-# in Spark 4.1; tests/test_streaming.py pins the default-store refusal).
-TWS_EXECUTED_PROGRESS: list = []
-
-
 def q_stream_tws_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``transformWithStateInPandas`` (Spark 4's successor stateful API),
     driver-checked (r10, VERDICT r9 #6) — the same per-user EWMA fold as
@@ -1383,14 +1371,9 @@ def q_stream_tws_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the applyInPandasWithState twin
         return q_stream_ewma_user_value(spark, sf_dir)
     stream, _d = replay_events_stream_ordered(spark, sf_dir)  # memoized
-    sink = _with_rocksdb_state_store(
-        spark,
-        lambda: run_to_table(
-            running_ewma_tws(stream, alpha=0.1),
-            mode="update",
-            capture_plan=TWS_EXECUTED_PLANS,
-            capture_progress=TWS_EXECUTED_PROGRESS,
-        ),
+    sink = run_to_table(
+        running_ewma_tws(stream, alpha=0.1),
+        mode="update",
     )
     return _ewma_final_answer(sink)
 
@@ -1437,41 +1420,6 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-def _with_rocksdb_state_store(spark: SparkSession, run):
-    """Run a streaming build under the RocksDB state-store provider,
-    restoring the previous provider afterwards (the
-    q_stream_rocksdb_state_counts discipline — later streaming keys in the
-    same session must keep the backend they were validated under).
-
-    r17 (guide §5, VERDICT r16 #2): changelog checkpointing is enabled for
-    the query's lifetime — each commit uploads only the batch's state DELTA
-    instead of zipping a full RocksDB snapshot, which is the production
-    recommendation for frequent commits and was the tws keys' largest
-    per-trigger line (``commitTimeMs`` ≈ 16–26 s summed per trigger at
-    sf0.1 before). Purely a checkpoint-format choice: computed results are
-    unchanged, and the checkpoint-restart key certifies recovery."""
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-            "true"
-        ),
-    }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        return run()
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev)
-
-
 def q_stream_tws_bitmap_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING EXACT DISTINCT on ``transformWithStateInPandas`` with the
     sparse word→bits dictionary in a typed ``MapState`` (r11) — certifies
@@ -1508,14 +1456,10 @@ def q_stream_tws_bitmap_map_state(spark: SparkSession, sf_dir: str) -> DataFrame
             python_stateful=False,
         )
     else:
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_bitmap_distinct_tws(stream, "user_id", "event_type"),
-                mode="update",
-                capture_plan=TWS_EXECUTED_PLANS,
-                python_stateful=False,
-            ),
+        sink = run_to_table(
+            running_bitmap_distinct_tws(stream, "user_id", "event_type"),
+            mode="update",
+            python_stateful=False,
         )
     return (
         sink.groupBy(F.col("group").alias("event_type"))
@@ -1560,14 +1504,10 @@ def q_stream_tws_topk_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             python_stateful=False,
         )
     else:
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_grouped_topk_tws_list(stream, k=5),
-                mode="update",
-                capture_plan=TWS_EXECUTED_PLANS,
-                python_stateful=False,
-            ),
+        sink = run_to_table(
+            running_grouped_topk_tws_list(stream, k=5),
+            mode="update",
+            python_stateful=False,
         )
     mx = sink.groupBy(F.col("group").alias("g")).agg(F.max("n_seen").alias("mx"))
     return (
@@ -1669,17 +1609,13 @@ def q_stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink = _batch_session_fallback(spark, sf_dir)
     else:
         stream, _d = replay_events_stream_ordered(spark, sf_dir)  # memoized
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_session_gap_tws(
-                    stream,
-                    gap_minutes=_SESSION_GAP_MIN,
-                    delay=f"{_SESSION_DELAY_MIN} minutes",
-                ),
-                mode="append",
-                capture_plan=TWS_EXECUTED_PLANS,
+        sink = run_to_table(
+            running_session_gap_tws(
+                stream,
+                gap_minutes=_SESSION_GAP_MIN,
+                delay=f"{_SESSION_DELAY_MIN} minutes",
             ),
+            mode="append",
         )
     return sink.select(
         "user_id",
@@ -1838,13 +1774,9 @@ def q_stream_tws_warm_start_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix = stream.filter(
         F.col("ts").isNull() | (F.col("ts") >= F.lit(_WARM_START_CUT))
     )
-    sink = _with_rocksdb_state_store(
-        spark,
-        lambda: run_to_table(
-            running_ewma_tws_warm_start(suffix, warm, alpha=0.1),
-            mode="update",
-            capture_plan=TWS_EXECUTED_PLANS,
-        ),
+    sink = run_to_table(
+        running_ewma_tws_warm_start(suffix, warm, alpha=0.1),
+        mode="update",
     )
     streamed = _ewma_final_answer(sink)
     warm_only = (
@@ -1907,13 +1839,9 @@ def q_stream_tws_lsh_index_candidates(spark: SparkSession, sf_dir: str) -> DataF
         )
     else:
         stream, _d = replay_documents_stream_ordered(spark, sf_dir)  # memoized
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_lsh_index_tws(stream),
-                mode="update",
-                capture_plan=TWS_EXECUTED_PLANS,
-            ),
+        sink = run_to_table(
+            running_lsh_index_tws(stream),
+            mode="update",
         )
         pairs = sink.select("dup_of", "new_id")
     return pairs.distinct().orderBy("dup_of", "new_id")
@@ -1994,13 +1922,9 @@ def q_stream_tws_lsh_bounded_bucket(spark: SparkSession, sf_dir: str) -> DataFra
         )
     else:
         stream, _d = replay_documents_stream_ordered(spark, sf_dir)  # memoized
-        sink = _with_rocksdb_state_store(
-            spark,
-            lambda: run_to_table(
-                running_lsh_index_tws(stream, bucket_cap=cap),
-                mode="update",
-                capture_plan=TWS_EXECUTED_PLANS,
-            ),
+        sink = run_to_table(
+            running_lsh_index_tws(stream, bucket_cap=cap),
+            mode="update",
         )
         out = sink.select("dup_of", "new_id")
     return out.distinct().orderBy("dup_of", "new_id")
@@ -2998,37 +2922,28 @@ def q_stream_rocksdb_state_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     ``RocksDBStateStoreProvider``, must equal the batch aggregate (the
     oracle). Grouping by (event_type, user bucket) puts real multi-row
     state through the backend; the tiny sink re-aggregates to event_type
-    batch-side. The provider conf is set for the query's start and
-    restored in a ``finally`` (it's read at query start, so the scope is
-    exact).
+    batch-side. The provider is set through ``session.scoped_conf``
+    around the run, which restores the session's previous provider
+    afterwards; the running query keeps the clone of the conf it started
+    with. (The runners choose RocksDB on their own only for
+    ``transformWithState`` queries, which cannot run on any other store.)
 
     Scale: this key certifies the backend swap is semantics-preserving —
     the production knob is one conf line, not a plan change."""
+    from rocana_impala_udfs_spark.session import scoped_conf
     from rocana_impala_udfs_spark.streaming.replay import (
+        ROCKSDB_STATE_STORE,
         replay_events_stream,
         run_to_table,
     )
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream, _d = replay_events_stream(spark, sf_dir)
+    agg = stream.groupBy("event_type", (F.col("user_id") % 16).alias("bucket")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.col("value").cast("decimal(18,6)")).alias("s"),
     )
-    try:
-        stream, _d = replay_events_stream(spark, sf_dir)
-        agg = stream.groupBy(
-            "event_type", (F.col("user_id") % 16).alias("bucket")
-        ).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("s"),
-        )
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         sink = run_to_table(agg, mode="complete")
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
     return (
         sink.groupBy("event_type")
         .agg(

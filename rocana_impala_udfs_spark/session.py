@@ -13,6 +13,7 @@ Scale notes (100 TB design, tested on local[N]):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 
@@ -241,25 +242,54 @@ _STREAM_MIN_PARTITIONS = 4
 
 
 def autosize_stream_state_partitions(
-    spark: SparkSession, replayed_dir: str, python_stateful: bool = False
+    spark: SparkSession, *replayed_dirs: str, python_stateful: bool = False
 ) -> int:
     """State-store partition count for a bounded-replay streaming query,
-    sized from the bytes actually replayed (see block comment above).
-    Pure computation — the caller (streaming/replay.py's query runners)
-    sets ``spark.sql.shuffle.partitions`` around the query's lifetime and
-    RESTORES it afterwards, because batch operators read that conf as a
-    parallelism target (`_ensure_parallelism` siblings).
+    sized from the bytes of every directory it replays (see block comment
+    above). Pure computation — streaming/replay.py's runners read the
+    directories from the query's own plan and set
+    ``spark.sql.shuffle.partitions`` through :func:`scoped_conf` around the
+    query's ``start()`` only: the started query keeps its clone of the
+    conf, and the session value is restored because batch operators read
+    it as a parallelism target (``sources.io.ensure_parallelism``).
     ``SPARK_GRAFT_STREAM_PARTITIONS`` is the explicit operator override."""
     env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
     if env:
         return int(env)
-    n = -(-_dir_bytes(replayed_dir) // _STREAM_TARGET_BYTES_PER_PARTITION)  # ceil
+    total = sum(_dir_bytes(d) for d in set(replayed_dirs))
+    n = -(-total // _STREAM_TARGET_BYTES_PER_PARTITION)  # ceil
     floor = (
         spark.sparkContext.defaultParallelism
         if python_stateful
         else _STREAM_MIN_PARTITIONS
     )
     return max(floor, min(n, _MAX_INITIAL_PARTITIONS))
+
+
+# One lock for every scoped conf change in the process: a scope's set and
+# its restore never interleave with another thread's, so two threads can
+# never leave each other's value in the session conf.
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body of the ``with`` block,
+    then restore each key to its previous value, or unset it if it had
+    none — also when the body raises. Scopes nest (the lock is
+    re-entrant); other threads' scopes wait for this one to end."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, prev in old.items():
+                if prev is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, prev)
 
 
 def reset_autosize(spark: SparkSession) -> None:

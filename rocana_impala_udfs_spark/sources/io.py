@@ -135,9 +135,10 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     scan is ONE partition and any compute-heavy map-side chain on it
     serializes (the Poisson-bootstrap keys' 3M-md5 projection measured
     4.5 s in one task at sf0.1 — ~0.15 s spread over 32). At 100 TB the
-    scan is already wide and this is a no-op — same contract as the
-    private helpers in operators/{dedup,skyline,multimodal}.py and
-    functions/text.py."""
+    scan is already wide and this is a no-op. The one widening helper:
+    the shingle explode (operators/dedup.py), the media codec kernels
+    (operators/multimodal.py) and the text signals (functions/text.py)
+    all call it."""
     target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < max(target // 2, 2):
         return df.repartition(target)

@@ -31,13 +31,18 @@ batch in disguise.
 
 Performance note (r16): the runners size the query's state-store partition
 count (``spark.sql.shuffle.partitions``, which AQE cannot coalesce for
-stateful workloads) from the bytes actually replayed via
-``session.autosize_stream_state_partitions`` and RESTORE the conf after the
-query stops. Results are partitioning-invariant (keyed aggregation state,
-watermark advancement and foreachBatch deltas do not depend on the reduce
-partition count); what changes is per-micro-batch task count and
-state-store file count — measured 2-3× of every JVM-stateful benched key's
-warm time at sf0.1.
+stateful workloads) from the bytes of the replay directories named in the
+query's own plan, via ``session.autosize_stream_state_partitions``, and
+start ``transformWithState`` queries on the RocksDB store (the only one
+Spark 4.1 runs them on). The confs are set through ``session.scoped_conf``
+around ``start()`` alone and restored as soon as the query has started:
+``start()`` clones the session conf, so the running query keeps its values
+while the session (and every other thread's query) gets the old ones back.
+Results are partitioning-invariant (keyed aggregation state, watermark
+advancement and foreachBatch deltas do not depend on the reduce partition
+count); what changes is per-micro-batch task count and state-store file
+count — measured 2-3× of every JVM-stateful benched key's warm time at
+sf0.1.
 """
 
 from __future__ import annotations
@@ -49,64 +54,40 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rocana_impala_udfs_spark.session import (
+    autosize_stream_state_partitions,
+    scoped_conf,
+)
 from rocana_impala_udfs_spark.sources.io import load_table
 
 
 _REPLAY_DIRS: dict = {}
 
-# Most-recent replay source dir built in this process — the state-partition
-# autosizer's input (r16): every plan function builds its replay source(s)
-# and immediately runs the query through one of the runners below, so "the
-# last replay dir written" is the data the next query replays. Runners that
-# see no hint (direct writeStream users, tests) change nothing.
-_STATE_PARTITION_HINT: dict = {"dir": None}
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
+# transformWithState state needs per-state column families, which only the
+# RocksDB store has in Spark 4.1 (tests/test_streaming.py pins the default
+# store's refusal). Changelog checkpointing (r17) makes each commit upload
+# the batch's state delta instead of a full RocksDB snapshot — the tws
+# keys' largest per-trigger line before; results are unchanged.
+_TWS_CONFS = {
+    **ROCKSDB_STATE_STORE,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+# The stateful Python operators, matched by node name (ADVICE r16 #4): the
+# generic "InPandas" substring also matches stateless mapInPandas kernels.
+_PYTHON_STATE_NODES = (
+    "FlatMapGroupsInPandasWithState",
+    "TransformWithStateInPySpark",
+    "TransformWithStateInPandas",
+)
 
-
-def _stream_conf_override(
-    out: DataFrame,
-    python_stateful: bool | None = None,
-    replay_dir: str | None = None,
-):
-    """(conf_key, new_value, old_value) for the state-partition override of
-    the query about to start, or None when no replay dir is known. The
-    sizing input is ``replay_dir`` when the caller threads it explicitly
-    (ADVICE r16 #1); otherwise the module hint left by the last replay
-    builder in this process. The Python-stateful floor is detected from the
-    analyzed logical plan (the stateful *InPandas*/*InPySpark* operators
-    parallelize real Python compute across state partitions — see
-    session.autosize_stream_state_partitions); a plan function that KNOWS
-    its Python state is domain-bounded (a handful of group keys, so
-    core-count state partitions are mostly empty stores) declares
-    ``python_stateful=False`` explicitly to keep the machinery floor
-    instead."""
-    d = replay_dir or _STATE_PARTITION_HINT.get("dir")
-    if not d or not os.path.isdir(d):
-        return None
-    from rocana_impala_udfs_spark.session import autosize_stream_state_partitions
-
-    if python_stateful is None:
-        try:
-            plan = out._jdf.queryExecution().analyzed().toString()
-        except Exception:
-            plan = ""
-        # Match the specific STATEFUL operator nodes (ADVICE r16 #4): the
-        # generic "InPandas" substring also matches stateless mapInPandas
-        # kernels (e.g. a brute-force scoring stage) in a plan whose
-        # stateful operator is JVM-side, which kept core-count partitions
-        # where the machinery floor was intended.
-        python_stateful = (
-            "FlatMapGroupsInPandasWithState" in plan
-            or "TransformWithStateInPySpark" in plan
-            or "TransformWithStateInPandas" in plan
-        )
-    n = autosize_stream_state_partitions(
-        out.sparkSession, d, python_stateful=python_stateful
-    )
-    key = "spark.sql.shuffle.partitions"
-    return key, str(n), out.sparkSession.conf.get(key, None)
 
 # Most-recent streaming run's final stateful-operator progress, refreshed by
-# every run_to_table call (None when the query had no stateful operator).
+# every runner (None when the query had no stateful operator).
 # The streaming scale sweep (tools/scaling_stream_sweep.py, VERDICT r13 #2)
 # reads state-store growth — numRowsTotal / memoryUsedBytes per operator —
 # through the EXACT driver-key path without threading a capture list into
@@ -119,13 +100,79 @@ LAST_PROGRESS: dict = {"progress": None}
 # delta rows). Read by tools/scaling_stream_sweep.py.
 
 
+def _stream_confs(out: DataFrame, python_stateful: bool | None) -> dict:
+    """The confs ``out`` must start under, read from its analyzed plan:
+
+    - its file-source directories size the state partition count
+      (``spark.sql.shuffle.partitions``); a query that replays no directory
+      keeps the session value;
+    - the Python-stateful floor applies when the plan has a stateful
+      Python operator (those parallelize real Python compute across state
+      partitions), unless the caller declares ``python_stateful`` — a plan
+      function that KNOWS its Python state is domain-bounded (a handful of
+      group keys) passes False to keep the machinery floor;
+    - a ``transformWithState`` operator adds the RocksDB store.
+    """
+    plan = out._jdf.queryExecution().analyzed()
+    text = plan.toString()
+    dirs = []
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "StreamingRelation":
+            path = leaf.dataSource().options().get("path")
+            if path.isDefined() and os.path.isdir(path.get()):
+                dirs.append(path.get())
+    confs = {}
+    if dirs:
+        if python_stateful is None:
+            python_stateful = any(n in text for n in _PYTHON_STATE_NODES)
+        n = autosize_stream_state_partitions(
+            out.sparkSession, *dirs, python_stateful=python_stateful
+        )
+        confs["spark.sql.shuffle.partitions"] = str(n)
+    if "TransformWithState" in text:
+        confs.update(_TWS_CONFS)
+    return confs
+
+
+def _run(
+    out: DataFrame,
+    writer,
+    python_stateful: bool | None = None,
+    capture_plan: list | None = None,
+) -> None:
+    """Start ``writer`` (``out.writeStream`` with its sink set) under
+    :func:`_stream_confs`, drain every available input, stop, and record
+    the progress in :data:`LAST_PROGRESS`. The confs are scoped to
+    ``start()`` alone (the query runs on its clone of them), so no other
+    thread's query or batch plan sees them while this one drains."""
+    with scoped_conf(out.sparkSession, _stream_confs(out, python_stateful)):
+        q = writer.start()
+    try:
+        q.processAllAvailable()
+        if capture_plan is not None:
+            capture_plan.append(q._jsq.explainInternal(False))
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    with_state = [p for p in progress if p.get("stateOperators")]
+    LAST_PROGRESS["progress"] = with_state[-1] if with_state else None
+    LAST_PROGRESS["sink_rows_total"] = sum(
+        n
+        for p in progress
+        for n in [int((p.get("sink") or {}).get("numOutputRows", -1))]
+        if n >= 0
+    )
+
+
 def replay_events_stream(
     spark: SparkSession, sf_dir: str, copies: int = 1, files: int = 4
 ) -> tuple[DataFrame, str]:
     """Write the normalized events table to a temp dir (``copies`` times —
     >1 plants exact duplicates for dedup operators) split into ``files``
     files, and open it as a file-source stream, one file per micro-batch.
-    Returns (stream_df, replay_dir). The written replay is memoized per
+    Returns (stream_df, replay directory). The written replay is memoized per
     (sf_dir, copies, files) for the process lifetime — repeated runs
     (bench does 3) skip the rewrite; ``cleanup`` drops the memo too.
     """
@@ -142,7 +189,6 @@ def replay_events_stream(
                 "append" if i else "overwrite"
             ).parquet(d)
         _REPLAY_DIRS[key] = d
-    _STATE_PARTITION_HINT["dir"] = d
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -185,9 +231,7 @@ def run_to_table(
     out: DataFrame,
     mode: str = "complete",
     capture_plan: list | None = None,
-    capture_progress: list | None = None,
     python_stateful: bool | None = None,
-    replay_dir: str | None = None,
 ) -> DataFrame:
     """Run a streaming aggregation to completion into a memory sink and
     return the final result table (batch DataFrame).
@@ -196,53 +240,21 @@ def run_to_table(
     plan string (``explainInternal`` of the last micro-batch) is appended to
     it before the query stops — tests pin operator choices (e.g.
     ``TransformWithStateInPandasExec``) through the exact driver-key path.
-
-    ``capture_progress``: when a list is passed, the last non-empty
-    ``StreamingQueryProgress`` dict is appended — tests pin the STATE
-    STORE the query really ran on (the RocksDB provider reports
-    ``rocksdb*`` customMetrics per stateful operator; the HDFS-backed
-    default reports none) through the exact driver-key path.
     """
     name = "replay_" + uuid.uuid4().hex[:12]
-    ov = _stream_conf_override(out, python_stateful, replay_dir)
-    if ov is not None:
-        out.sparkSession.conf.set(ov[0], ov[1])
-    try:
-        q = out.writeStream.format("memory").queryName(name).outputMode(mode).start()
-        try:
-            q.processAllAvailable()
-            if capture_plan is not None:
-                capture_plan.append(q._jsq.explainInternal(False))
-            with_state = [p for p in q.recentProgress if p.get("stateOperators")]
-            LAST_PROGRESS["progress"] = with_state[-1] if with_state else None
-            LAST_PROGRESS["sink_rows_total"] = sum(
-                n
-                for p in q.recentProgress
-                for n in [int((p.get("sink") or {}).get("numOutputRows", -1))]
-                if n >= 0
-            )
-            if capture_progress is not None and with_state:
-                capture_progress.append(with_state[-1])
-        finally:
-            q.stop()
-    finally:
-        # restore: batch operators read this conf as a parallelism target
-        # (unset when there was no prior value — ADVICE r16 #3: skipping
-        # the restore would leak the override into later batch plans)
-        if ov is not None:
-            if ov[2] is None:
-                out.sparkSession.conf.unset(ov[0])
-            else:
-                out.sparkSession.conf.set(ov[0], ov[2])
+    _run(
+        out,
+        out.writeStream.format("memory").queryName(name).outputMode(mode),
+        python_stateful,
+        capture_plan,
+    )
     return out.sparkSession.table(name)
 
 
 def run_foreach_batch_merge(
     out: DataFrame,
     key_cols: list,
-    capture_progress: list | None = None,
     python_stateful: bool | None = None,
-    replay_dir: str | None = None,
 ) -> DataFrame:
     """PRODUCTION SINK SHAPE for update-mode state (VERDICT r15 #4): run
     ``out`` with ``foreachBatch`` and MERGE each trigger's delta into a
@@ -277,25 +289,11 @@ def run_foreach_batch_merge(
             "append"
         ).parquet(log_dir)
 
-    ov = _stream_conf_override(out, python_stateful, replay_dir)
-    if ov is not None:
-        out.sparkSession.conf.set(ov[0], ov[1])
-    try:
-        q = out.writeStream.outputMode("update").foreachBatch(_append).start()
-        try:
-            q.processAllAvailable()
-            with_state = [p for p in q.recentProgress if p.get("stateOperators")]
-            LAST_PROGRESS["progress"] = with_state[-1] if with_state else None
-            if capture_progress is not None and with_state:
-                capture_progress.append(with_state[-1])
-        finally:
-            q.stop()
-    finally:
-        if ov is not None:
-            if ov[2] is None:
-                out.sparkSession.conf.unset(ov[0])
-            else:
-                out.sparkSession.conf.set(ov[0], ov[2])
+    _run(
+        out,
+        out.writeStream.outputMode("update").foreachBatch(_append),
+        python_stateful,
+    )
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -333,8 +331,6 @@ def run_with_restart(spark: SparkSession, sf_dir: str, build_agg) -> DataFrame:
     final table must equal the batch aggregate of everything, which is
     the oracle. ``build_agg`` maps the stream DataFrame to the complete-
     mode aggregation."""
-    import uuid as _uuid
-
     ev = load_table(spark, sf_dir, "events")
     _, src = replay_events_stream(spark, sf_dir)
     files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
@@ -358,32 +354,15 @@ def run_with_restart(spark: SparkSession, sf_dir: str, build_agg) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        name = "restart_" + _uuid.uuid4().hex[:12]
+        name = "restart_" + uuid.uuid4().hex[:12]
         agg = build_agg(s)
-        # the staged dir is threaded explicitly (ADVICE r16 #1): this
-        # runner replays its own staged copy, and the module hint still
-        # points at the shared replay dir another query built
-        ov = _stream_conf_override(agg, replay_dir=stage)
-        if ov is not None:
-            spark.conf.set(ov[0], ov[1])
-        try:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", cp)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            if ov is not None:
-                if ov[2] is None:
-                    spark.conf.unset(ov[0])
-                else:
-                    spark.conf.set(ov[0], ov[2])
+        _run(
+            agg,
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", cp),
+        )
         return name
 
     try:
@@ -445,7 +424,6 @@ def _ordered_replay(
                         t0 = os.path.getmtime(fp)
                     os.utime(fp, (t0 + i, t0 + i))
         _REPLAY_DIRS[memo_key] = d
-    _STATE_PARTITION_HINT["dir"] = d
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -1093,22 +1093,36 @@ def test_sample_sum_ci_estimator_and_coverage(spark):
     assert out.covered == (out.ci_lo <= out.true_total <= out.ci_hi)
 
 
-def test_tws_driver_key_executes_transform_with_state_exec(spark):
+def _capture_stream_plans(monkeypatch) -> list:
+    """Wrap ``replay.run_to_table`` so every streaming query a key runs
+    appends its executed physical plan to the returned list — the exact
+    driver-key path, with no capture hook in the plan functions."""
+    from rocana_impala_udfs_spark.streaming import replay
+
+    executed: list = []
+    real = replay.run_to_table
+    monkeypatch.setattr(
+        replay,
+        "run_to_table",
+        lambda out, *a, **kw: real(out, *a, capture_plan=executed, **kw),
+    )
+    return executed
+
+
+def test_tws_driver_key_executes_transform_with_state_exec(spark, monkeypatch):
     """stream_tws_ewma_user_value must run the GENUINE Spark 4
     transformWithStateInPandas operator (VERDICT r10 #1): the captured
     executed plan of the driver key's own streaming query contains
     TransformWithStateInPandasExec — evidence the vendored protobuf shim
     carried the state-server protocol end to end, not the
     applyInPandasWithState fallback twin."""
-    from rocana_impala_udfs_spark.plans import temporal
-
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    plans = _capture_stream_plans(monkeypatch)
     out = _plan(spark, "stream_tws_ewma_user_value")  # runs the stream
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, (
+    assert plans, (
         "tws key fell back to the applyInPandasWithState twin; batch plan:\n"
         + out
     )
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
+    executed = plans[-1]
     # Spark 4.1 names the executed python-tws operator
     # TransformWithStateInPySpark (earlier 4.x: TransformWithStateInPandasExec)
     assert (
@@ -1119,17 +1133,16 @@ def test_tws_driver_key_executes_transform_with_state_exec(spark):
     assert "FlatMapGroupsInPandasWithState" not in executed, executed
 
 
-def test_tws_map_and_list_state_keys_execute_tws_operator(spark):
+def test_tws_map_and_list_state_keys_execute_tws_operator(spark, monkeypatch):
     """stream_tws_bitmap_map_state / stream_tws_topk_list_state must run
     the genuine tws operator (MapState and ListState wire-protocol
     certification), not their applyInPandasWithState twins."""
-    from rocana_impala_udfs_spark.plans import temporal
-
+    plans = _capture_stream_plans(monkeypatch)
     for key in ("stream_tws_bitmap_map_state", "stream_tws_topk_list_state"):
-        before = len(temporal.TWS_EXECUTED_PLANS)
+        before = len(plans)
         _plan(spark, key)
-        assert len(temporal.TWS_EXECUTED_PLANS) > before, f"{key} fell back"
-        executed = temporal.TWS_EXECUTED_PLANS[-1]
+        assert len(plans) > before, f"{key} fell back"
+        executed = plans[-1]
         assert (
             "TransformWithStateInPySpark" in executed
             or "TransformWithStateInPandas" in executed
@@ -1137,15 +1150,13 @@ def test_tws_map_and_list_state_keys_execute_tws_operator(spark):
         assert "state info" in executed, (key, executed)
 
 
-def test_tws_session_timer_key_executes_tws_operator(spark):
+def test_tws_session_timer_key_executes_tws_operator(spark, monkeypatch):
     """stream_tws_session_timers must run the genuine tws operator — the
     event-time-timer protocol certification, not the batch fallback."""
-    from rocana_impala_udfs_spark.plans import temporal
-
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    plans = _capture_stream_plans(monkeypatch)
     _plan(spark, "stream_tws_session_timers")
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, "fell back to batch plan"
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
+    assert plans, "fell back to batch plan"
+    executed = plans[-1]
     assert (
         "TransformWithStateInPySpark" in executed
         or "TransformWithStateInPandas" in executed
@@ -1153,15 +1164,13 @@ def test_tws_session_timer_key_executes_tws_operator(spark):
     assert "state info" in executed, executed
 
 
-def test_tws_lsh_index_key_executes_tws_operator(spark):
+def test_tws_lsh_index_key_executes_tws_operator(spark, monkeypatch):
     """stream_tws_lsh_index_candidates must run the genuine tws operator
     (ListState bucket index), not the batch band self-join fallback."""
-    from rocana_impala_udfs_spark.plans import temporal
-
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    plans = _capture_stream_plans(monkeypatch)
     _plan(spark, "stream_tws_lsh_index_candidates")
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, "fell back to batch plan"
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
+    assert plans, "fell back to batch plan"
+    executed = plans[-1]
     assert (
         "TransformWithStateInPySpark" in executed
         or "TransformWithStateInPandas" in executed
@@ -1175,44 +1184,40 @@ def test_tws_driver_key_state_lives_in_rocksdb(spark):
     operator; the HDFS-backed default reports none and, in Spark 4.1,
     cannot run tws at all — see
     test_streaming.py::test_tws_requires_rocksdb_state_store)."""
-    from rocana_impala_udfs_spark.plans import temporal
+    from rocana_impala_udfs_spark.streaming import replay
 
-    before = len(temporal.TWS_EXECUTED_PROGRESS)
+    replay.LAST_PROGRESS["progress"] = None
     _plan(spark, "stream_tws_ewma_user_value")  # runs the stream
-    assert len(temporal.TWS_EXECUTED_PROGRESS) > before, "no progress captured"
-    progress = temporal.TWS_EXECUTED_PROGRESS[-1]
+    progress = replay.LAST_PROGRESS["progress"]
+    assert progress is not None, "no progress captured"
     ops = progress["stateOperators"]
     assert ops, progress
     metrics = ops[0]["customMetrics"]
     assert any(str(k).startswith("rocksdb") for k in metrics), metrics
 
 
-def test_tws_lsh_bounded_key_executes_tws_operator(spark):
+def test_tws_lsh_bounded_key_executes_tws_operator(spark, monkeypatch):
     """stream_tws_lsh_bounded_bucket must run the genuine tws operator —
     the bounded-bucket (cap + overflow marker) variant, not the batch
     rank-window fallback."""
-    from rocana_impala_udfs_spark.plans import temporal
-
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    plans = _capture_stream_plans(monkeypatch)
     _plan(spark, "stream_tws_lsh_bounded_bucket")
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, "fell back to batch plan"
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
+    assert plans, "fell back to batch plan"
+    executed = plans[-1]
     assert (
         "TransformWithStateInPySpark" in executed
         or "TransformWithStateInPandas" in executed
     ), executed
 
 
-def test_tws_warm_start_key_executes_tws_operator(spark):
+def test_tws_warm_start_key_executes_tws_operator(spark, monkeypatch):
     """stream_tws_warm_start_ewma must run the genuine tws operator with
     initial state (the handleInitialState certification), not the
     full-stream fallback."""
-    from rocana_impala_udfs_spark.plans import temporal
-
-    before = len(temporal.TWS_EXECUTED_PLANS)
+    plans = _capture_stream_plans(monkeypatch)
     _plan(spark, "stream_tws_warm_start_ewma")
-    assert len(temporal.TWS_EXECUTED_PLANS) > before, "fell back"
-    executed = temporal.TWS_EXECUTED_PLANS[-1]
+    assert plans, "fell back"
+    executed = plans[-1]
     assert (
         "TransformWithStateInPySpark" in executed
         or "TransformWithStateInPandas" in executed
@@ -1225,15 +1230,7 @@ def test_stream_median_key_runs_native_state_store_aggregate(spark, monkeypatch)
     the key's streaming query has StateStoreSave and no Python stateful
     operator (the applyInPandasWithState / transformWithState routes are
     gone)."""
-    from rocana_impala_udfs_spark.streaming import replay
-
-    executed: list = []
-    real = replay.run_to_table
-    monkeypatch.setattr(
-        replay,
-        "run_to_table",
-        lambda out, *a, **kw: real(out, *a, capture_plan=executed, **kw),
-    )
+    executed = _capture_stream_plans(monkeypatch)
     _plan(spark, "stream_tws_median_value")
     assert len(executed) == 1, executed
     plan = executed[0]

@@ -229,3 +229,54 @@ def test_run_to_table_applies_and_restores_state_partitions(spark):
         spark.sparkContext.defaultParallelism
     ]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_state_partitions_sized_from_the_query_own_replay(spark, monkeypatch):
+    """The state partition count comes from the directory the query
+    replays, not from whichever replay was built last in the process:
+    with a per-partition target small enough that the sf0.001 and sf0.01
+    replays size differently, a query over the sf0.001 replay built
+    BEFORE the sf0.01 one still runs at the sf0.001 size."""
+    from pyspark.sql import functions as F
+
+    from rocana_impala_udfs_spark import session
+    from rocana_impala_udfs_spark.streaming import replay
+
+    stream_a, dir_a = replay.replay_events_stream(spark, SF_SMOKE)
+    sf_b = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    _stream_b, dir_b = replay.replay_events_stream(spark, sf_b)
+    monkeypatch.setattr(
+        session, "_STREAM_TARGET_BYTES_PER_PARTITION", session._dir_bytes(dir_a) // 5
+    )
+    n_a = session.autosize_stream_state_partitions(spark, dir_a)
+    assert n_a != session.autosize_stream_state_partitions(spark, dir_b)
+
+    agg = stream_a.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    assert replay.run_to_table(agg, mode="complete").count() > 0
+    ops = replay.LAST_PROGRESS["progress"]["stateOperators"]
+    assert [o["numShufflePartitions"] for o in ops] == [n_a]
+
+
+def test_scoped_conf_restores_set_unset_on_raise_and_nested(spark):
+    from rocana_impala_udfs_spark.session import scoped_conf
+
+    unset_key = "spark.rocana.test.scopedConf"
+    set_key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(unset_key, None) is None
+    before = spark.conf.get(set_key)
+
+    with scoped_conf(spark, {unset_key: "a", set_key: "7"}):
+        assert spark.conf.get(unset_key) == "a"
+        assert spark.conf.get(set_key) == "7"
+        with scoped_conf(spark, {unset_key: "b"}):
+            assert spark.conf.get(unset_key) == "b"
+            assert spark.conf.get(set_key) == "7"
+        assert spark.conf.get(unset_key) == "a"
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(set_key) == before
+
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {unset_key: "c", set_key: "9"}):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(set_key) == before

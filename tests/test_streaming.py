@@ -9,14 +9,35 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from rocana_impala_udfs_spark.session import scoped_conf
 from rocana_impala_udfs_spark.sources.io import load_table
 from rocana_impala_udfs_spark.streaming.median_stream import (
     running_median_stream,
     windowed_median_stream,
 )
+from rocana_impala_udfs_spark.streaming.replay import ROCKSDB_STATE_STORE
 
 SF = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+HDFS_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    ),
+}
+# The confs the replay runners and the RocksDB tests scope; every test in
+# this file must leave them as it found them.
+SCOPED_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+)
+
+
+@pytest.fixture(autouse=True)
+def confs_restored(spark):
+    before = {k: spark.conf.get(k, None) for k in SCOPED_CONFS}
+    yield
+    assert {k: spark.conf.get(k, None) for k in SCOPED_CONFS} == before
 
 
 @pytest.fixture()
@@ -220,17 +241,16 @@ def test_domain_bounded_python_state_keys_declare_python_stateful_false(spark, m
         pass
 
     seen = []
+    tws_runs = []
 
     def runner(out, *a, **kw):
         seen.append(kw.get("python_stateful", "missing"))
+        if "TransformWithState" in out._jdf.queryExecution().analyzed().toString():
+            tws_runs.append(1)
         raise Stop
 
-    tws_runs = []
     monkeypatch.setattr(replay, "run_to_table", runner)
     monkeypatch.setattr(replay, "run_foreach_batch_merge", runner)
-    monkeypatch.setattr(
-        temporal, "_with_rocksdb_state_store", lambda spark, run: tws_runs.append(1) or run()
-    )
     monkeypatch.setattr(pbshim, "ensure_protobuf", lambda: True)
     keys = (
         temporal.q_stream_topk_events_per_type,
@@ -955,14 +975,11 @@ def test_running_grouped_topk_tws_matches_apply_in_pandas_path(spark, event_stre
         running_grouped_topk_tws,
     )
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     schema = load_table(spark, SF, "events").schema
     stream = spark.readStream.schema(schema).parquet(event_stream_dir)
     out = running_grouped_topk_tws(stream, k=5)
-    _run_stream(out, "topk_tws")
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
+        _run_stream(out, "topk_tws")
     sink = spark.sql("SELECT * FROM topk_tws")
     mx = sink.groupBy(F.col("group").alias("g")).agg(F.max("n_seen").alias("mx"))
     got = {
@@ -1074,21 +1091,10 @@ def test_running_ewma_transform_with_state(spark, event_stream_dir):
         running_ewma_tws,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         schema = load_table(spark, SF, "events").schema
         stream = spark.readStream.schema(schema).parquet(event_stream_dir)
         _run_stream(running_ewma_tws(stream, alpha=0.1), "tws_ewma")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     stream2 = spark.readStream.schema(schema).parquet(event_stream_dir)
     _run_stream(running_ewma_stream(stream2, alpha=0.1), "apis_ewma")
 
@@ -1116,20 +1122,9 @@ def test_running_bitmap_distinct_tws_matches_twin_and_batch(spark, event_stream_
     )
 
     schema = load_table(spark, SF, "events").schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(schema).parquet(event_stream_dir)
         _run_stream(running_bitmap_distinct_tws(stream), "tws_bitmap")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     stream2 = spark.readStream.schema(schema).parquet(event_stream_dir)
     _run_stream(running_bitmap_distinct_stream(stream2), "apis_bitmap")
     final = """
@@ -1160,20 +1155,9 @@ def test_running_grouped_topk_tws_list_state_matches_twin(spark, event_stream_di
     )
 
     schema = load_table(spark, SF, "events").schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(schema).parquet(event_stream_dir)
         _run_stream(running_grouped_topk_tws_list(stream, k=5), "tws_topk_list")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     stream2 = spark.readStream.schema(schema).parquet(event_stream_dir)
     _run_stream(running_grouped_topk_stream(stream2, k=5), "apis_topk")
     final = """
@@ -1205,27 +1189,16 @@ def test_session_timers_tws_matches_batch_fallback(spark):
         running_session_gap_tws,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    # run_to_table starts transformWithState on the RocksDB store itself
+    stream, _d = replay_events_stream_ordered(spark, SF)
+    sink = run_to_table(
+        running_session_gap_tws(
+            stream,
+            gap_minutes=_SESSION_GAP_MIN,
+            delay=f"{_SESSION_DELAY_MIN} minutes",
+        ),
+        mode="append",
     )
-    try:
-        stream, _d = replay_events_stream_ordered(spark, SF)
-        sink = run_to_table(
-            running_session_gap_tws(
-                stream,
-                gap_minutes=_SESSION_GAP_MIN,
-                delay=f"{_SESSION_DELAY_MIN} minutes",
-            ),
-            mode="append",
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     got = sorted(
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
         for r in sink.collect()
@@ -1283,13 +1256,7 @@ def test_tws_value_state_with_ttl_config(spark, event_stream_dir):
     )
 
     schema = load_table(spark, SF, "events").schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(schema).parquet(event_stream_dir)
         out = (
             stream.select(
@@ -1331,11 +1298,6 @@ def test_tws_value_state_with_ttl_config(spark, event_stream_dir):
                 raise AssertionError(f"sink never reached {n_total} events")
         finally:
             q.stop()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     stream2 = spark.readStream.schema(schema).parquet(event_stream_dir)
     _run_stream(running_ewma_stream(stream2, alpha=0.1), "apis_ewma_ttl_twin")
     final = """
@@ -1390,13 +1352,7 @@ def test_tws_map_state_large_dictionary_roundtrip(spark):
     )
     d = _tf.mkdtemp(prefix="widemap_")
     src.coalesce(1).write.mode("overwrite").parquet(d)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(src.schema).parquet(d)
         out = stream.groupBy("g").transformWithStateInPandas(
             WideMap(),
@@ -1405,11 +1361,6 @@ def test_tws_map_state_large_dictionary_roundtrip(spark):
             timeMode="None",
         )
         _run_stream(out, "wide_map")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     row = spark.sql(
         "SELECT n_keys, checksum FROM wide_map ORDER BY n_keys DESC LIMIT 1"
     ).collect()[0]
@@ -1455,13 +1406,7 @@ def test_transform_with_state_row_api_matches_pandas_api(spark, event_stream_dir
     )
 
     schema = load_table(spark, SF, "events").schema
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(schema).parquet(event_stream_dir)
         out = (
             stream.select(
@@ -1479,11 +1424,6 @@ def test_transform_with_state_row_api_matches_pandas_api(spark, event_stream_dir
             )
         )
         _run_stream(out, "row_ewma")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     stream2 = spark.readStream.schema(schema).parquet(event_stream_dir)
     _run_stream(running_ewma_stream(stream2, alpha=0.1), "pandas_ewma_row_twin")
     final = """
@@ -1511,20 +1451,8 @@ def test_streaming_lsh_index_matches_batch_banding(spark):
         run_to_table,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream, _d = replay_documents_stream_ordered(spark, SF)
-        sink = run_to_table(running_lsh_index_tws(stream), mode="update")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    stream, _d = replay_documents_stream_ordered(spark, SF)
+    sink = run_to_table(running_lsh_index_tws(stream), mode="update")
     got = {(r.dup_of, r.new_id) for r in sink.collect()}
     assert all(a < b for a, b in got)
     b = md5_band_columns(load_table(spark, SF, "documents"))
@@ -1591,27 +1519,6 @@ def _docs_stream(spark, d):
     )
 
 
-def _under_rocksdb(spark, run):
-    """tws state REQUIRES the RocksDB provider in Spark 4.1 — the HDFS-
-    backed default store cannot create the per-state column families
-    (StateStoreMultipleColumnFamiliesNotSupportedException; pinned in
-    test_tws_requires_rocksdb_state_store). Same conf discipline as
-    plans.temporal._with_rocksdb_state_store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        return run()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def test_lsh_pairs_normalized_on_out_of_order_stream(spark, ooo_docs_dir):
     """ADVICE r11: pair orientation is normalized to (min, max) INSIDE the
     processor — doc 1 arrives AFTER docs 2,3, so without normalization the
@@ -1621,11 +1528,8 @@ def test_lsh_pairs_normalized_on_out_of_order_stream(spark, ooo_docs_dir):
     from rocana_impala_udfs_spark.streaming.dedup_stream import running_lsh_index_tws
     from rocana_impala_udfs_spark.streaming.replay import run_to_table
 
-    sink = _under_rocksdb(
-        spark,
-        lambda: run_to_table(
-            running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir)), mode="update"
-        ),
+    sink = run_to_table(
+        running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir)), mode="update"
     )
     got = {(r.dup_of, r.new_id) for r in sink.collect()}
     assert got == {(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (3, 4)}
@@ -1646,12 +1550,9 @@ def test_lsh_bounded_bucket_caps_state_and_emits_markers(spark, ooo_docs_dir):
     )
     from rocana_impala_udfs_spark.streaming.replay import run_to_table
 
-    sink = _under_rocksdb(
-        spark,
-        lambda: run_to_table(
-            running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir), bucket_cap=2),
-            mode="update",
-        ),
+    sink = run_to_table(
+        running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir), bucket_cap=2),
+        mode="update",
     )
     got = {(r.dup_of, r.new_id) for r in sink.collect()}
     assert got == {(2, 3), (OVERFLOW_MARKER, 1), (OVERFLOW_MARKER, 4)}
@@ -1679,12 +1580,9 @@ def test_lsh_bounded_bucket_emission_is_linear_not_quadratic(spark):
             spark.createDataFrame(
                 [(i, text) for i in range(50)], "doc_id bigint, text string"
             ).coalesce(1).write.mode("append").parquet(d)
-            sink = _under_rocksdb(
-                spark,
-                lambda: run_to_table(
-                    running_lsh_index_tws(_docs_stream(spark, d), bucket_cap=cap),
-                    mode="update",
-                ),
+            sink = run_to_table(
+                running_lsh_index_tws(_docs_stream(spark, d), bucket_cap=cap),
+                mode="update",
             )
             return sink.count()
         finally:
@@ -1717,12 +1615,13 @@ def test_lsh_bucket_ttl_evicts_cold_buckets(spark):
             out = running_lsh_index_tws(_docs_stream(spark, d), ttl_ms=ttl_ms)
             # TTL => ProcessingTime mode => cleanup batches keep scheduling,
             # so processAllAvailable never returns: poll numInputRows.
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .start()
-            )
+            with scoped_conf(spark, ROCKSDB_STATE_STORE):
+                q = (
+                    out.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("update")
+                    .start()
+                )
             try:
                 # numInputRows counts SOURCE rows (docs), not band rows.
                 # recentProgress is a RING capped at numRecentProgressUpdates
@@ -1759,41 +1658,34 @@ def test_lsh_bucket_ttl_evicts_cold_buckets(spark):
             shutil.rmtree(d, ignore_errors=True)
 
     # TTL far beyond the run: the index entry survives, the dup pairs
-    assert _under_rocksdb(spark, lambda: run(86_400_000, 0.0, "ttl_lsh_long")) == {
-        (1, 2)
-    }
+    assert run(86_400_000, 0.0, "ttl_lsh_long") == {(1, 2)}
     # TTL 1.5 s, 4 s idle: the bucket is evicted before doc 2 arrives
-    assert _under_rocksdb(spark, lambda: run(1_500, 4.0, "ttl_lsh_short")) == set()
+    assert run(1_500, 4.0, "ttl_lsh_short") == set()
 
 
 def test_tws_requires_rocksdb_state_store(spark, ooo_docs_dir):
     """VERDICT r11 missing #3, resolved with evidence: tws × RocksDB is
     not an optional pairing to certify — in Spark 4.1 the tws operator
     CANNOT run on the default HDFS-backed store at all (per-state column
-    families are a RocksDB-only feature), which is why every tws driver
-    key routes through _with_rocksdb_state_store. Pin the failure class
-    so a future Spark that lifts the restriction surfaces loudly."""
+    families are a RocksDB-only feature), which is why the replay runners
+    start every transformWithState query on RocksDB. The query is started
+    with writeStream directly, so no runner picks the store for it. Pin
+    the failure class so a future Spark that lifts the restriction
+    surfaces loudly."""
     pytest.importorskip("google.protobuf.descriptor")
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from rocana_impala_udfs_spark.streaming.dedup_stream import running_lsh_index_tws
-    from rocana_impala_udfs_spark.streaming.replay import run_to_table
 
-    # ensure the DEFAULT provider is in effect
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    if old is not None:
-        spark.conf.unset(key)
+    out = running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir))
+    with scoped_conf(spark, HDFS_STATE_STORE):
+        q = out.writeStream.format("memory").queryName("tws_hdfs").outputMode("update").start()
     try:
         with pytest.raises(StreamingQueryException) as exc:
-            run_to_table(
-                running_lsh_index_tws(_docs_stream(spark, ooo_docs_dir)),
-                mode="update",
-            )
+            q.processAllAvailable()
         assert "STATE_STORE_MULTIPLE_COLUMN_FAMILIES" in str(exc.value)
     finally:
-        if old is not None:
-            spark.conf.set(key, old)
+        q.stop()
 
 
 def test_session_timer_fires_on_exact_watermark_equality(spark):
@@ -1830,12 +1722,9 @@ def test_session_timer_fires_on_exact_watermark_equality(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(d)
         )
-        sink = _under_rocksdb(
-            spark,
-            lambda: run_to_table(
-                running_session_gap_tws(stream, gap_minutes=1, delay="1 minutes"),
-                mode="append",
-            ),
+        sink = run_to_table(
+            running_session_gap_tws(stream, gap_minutes=1, delay="1 minutes"),
+            mode="append",
         )
         got = {
             (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
@@ -1895,13 +1784,13 @@ def test_tws_processing_time_timer_fires(spark):
             outputMode="Append",
             timeMode="ProcessingTime",
         )
-        q = _under_rocksdb(
-            spark,
-            lambda: out.writeStream.format("memory")
-            .queryName("ptt_sink")
-            .outputMode("append")
-            .start(),
-        )
+        with scoped_conf(spark, ROCKSDB_STATE_STORE):
+            q = (
+                out.writeStream.format("memory")
+                .queryName("ptt_sink")
+                .outputMode("append")
+                .start()
+            )
         try:
             deadline = time.time() + 90
             rows = []
@@ -2073,3 +1962,45 @@ def test_foreach_batch_merge_target_is_keyed(spark):
         by_g[g].append(rk)
     for g, rks in by_g.items():
         assert sorted(rks) == list(range(1, len(rks) + 1))
+
+
+STRESS_KEYS = (
+    "stream_daily_event_stats",
+    "stream_tws_ewma_user_value",
+    "stream_cdc_latest_merge",
+    "stream_rocksdb_state_counts",
+    "appx_median_value_by_event_type",
+    "dedup_minhash_pairs",
+    "repetition_scores",
+    "multimodal_ppm_feature_histogram",
+)
+
+
+def test_concurrent_keys_match_sequential_and_restore_confs(spark):
+    """Streaming and batch keys built and run from a 4-thread pool in one
+    session give exactly their sequential results, and every conf the
+    runners scope is back at its old value afterwards."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+
+    def run(key):
+        return sorted(repr(tuple(r)) for r in qs[key](spark, SF).collect())
+
+    before = {k: spark.conf.get(k, None) for k in SCOPED_CONFS}
+    sequential = {k: run(k) for k in STRESS_KEYS}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = {k: pool.submit(run, k) for k in STRESS_KEYS}
+            concurrent = {k: f.result(timeout=600) for k, f in futures.items()}
+    finally:
+        sys.setswitchinterval(interval)
+    for k in STRESS_KEYS:
+        assert concurrent[k] == sequential[k], k
+        assert sequential[k], k
+    assert {k: spark.conf.get(k, None) for k in SCOPED_CONFS} == before
