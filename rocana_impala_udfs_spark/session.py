@@ -33,7 +33,9 @@ def get_spark(
     from rocana_impala_udfs_spark.vendor.pbshim import ensure_protobuf
 
     ensure_protobuf()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # SPARK_GRAFT_CPUS pins the core count; by default use the cores this
+    # process may run on.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

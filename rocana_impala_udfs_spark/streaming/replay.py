@@ -279,36 +279,41 @@ def run_foreach_batch_merge(
     keys), not O(all keys), and the log is bounded by total deltas; a
     production deployment compacts it continuously (Delta/Iceberg MERGE)
     — here the one-shot compaction read is the certified equivalent.
+
+    The compacted target (one row per key) is materialized with an eager
+    ``localCheckpoint`` and the log directory is deleted before return, so
+    no ``merge_log_*`` directory outlives the call.
     """
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     log_dir = tempfile.mkdtemp(prefix="merge_log_")
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         batch_df.withColumn("_merge_bid", F.lit(batch_id)).write.mode(
             "append"
         ).parquet(log_dir)
 
-    _run(
-        out,
-        out.writeStream.outputMode("update").foreachBatch(_append),
-        python_stateful,
-    )
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark = out.sparkSession
-    log = spark.read.parquet(log_dir)
-    # the log's total rows ARE the cumulative sink traffic: exactly the
-    # delta rows every trigger appended (foreachBatch progress reports
-    # numOutputRows=-1, so the log is the ground truth here)
-    LAST_PROGRESS["sink_rows_total"] = log.count()
-    w = Window.partitionBy(*key_cols).orderBy(F.col("_merge_bid").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_merge_bid")
-    )
+    try:
+        _run(
+            out,
+            out.writeStream.outputMode("update").foreachBatch(_append),
+            python_stateful,
+        )
+        log = out.sparkSession.read.parquet(log_dir)
+        # the log's total rows ARE the cumulative sink traffic: exactly the
+        # delta rows every trigger appended (foreachBatch progress reports
+        # numOutputRows=-1, so the log is the ground truth here)
+        LAST_PROGRESS["sink_rows_total"] = log.count()
+        w = Window.partitionBy(*key_cols).orderBy(F.col("_merge_bid").desc())
+        return (
+            log.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_merge_bid")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
 
 def cleanup(path: str) -> None:

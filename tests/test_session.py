@@ -280,3 +280,41 @@ def test_scoped_conf_restores_set_unset_on_raise_and_nested(spark):
             raise RuntimeError("body failed")
     assert spark.conf.get(unset_key, None) is None
     assert spark.conf.get(set_key) == before
+
+
+def test_default_core_count_is_the_process_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes ``local[N]`` and the
+    shuffle partitions to the cores this process may run on; when set, the
+    variable wins. A recording builder stands in for SparkSession's, so no
+    second JVM starts."""
+    import types
+
+    from rocana_impala_udfs_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            self.conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_INITIAL_PARTITIONS", raising=False)
+    conf = session.get_spark()
+    assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[3]", "3")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    conf = session.get_spark()
+    assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[5]", "5")

@@ -1964,6 +1964,27 @@ def test_foreach_batch_merge_target_is_keyed(spark):
         assert sorted(rks) == list(range(1, len(rks) + 1))
 
 
+def test_foreach_batch_merge_leaves_no_log_dir(spark, tmp_path, monkeypatch):
+    """The merge runner deletes its upsert log before returning: with the
+    temp root pointed at tmp_path, the three merge keys leave no
+    ``merge_log_*`` directory, and each still equals its DuckDB oracle."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from rocana_impala_udfs_spark.sources.io import TABLES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    qs, oracle = entry.queries(), entry.oracle_sql()
+    for key in ("stream_topk_events_merge", "stream_cdc_latest_merge", "stream_cdc_user_day_merge"):
+        got = sorted(map(tuple, qs[key](spark, SF).collect()), key=repr)
+        want = sorted(con.execute(oracle[key]).fetchall(), key=repr)
+        assert got == want and got, key
+    assert not list(tmp_path.glob("merge_log_*"))
+
+
 STRESS_KEYS = (
     "stream_daily_event_stats",
     "stream_tws_ewma_user_value",

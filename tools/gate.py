@@ -7,7 +7,9 @@ run at the end of every session, that fails loudly if any surface broke.
 Usage:
     python tools/gate.py              # full gate (~10-12 min)
     python tools/gate.py --quick     # pytest -x on plans/env + 8-key harness
-                                     # subset + 3-query bench (~4 min)
+                                     # subset + 3-query bench (~6 min on
+                                     # 4 vCPUs; the plans tests plan all
+                                     # 349 keys for the shape guard)
 
 Exit code 0 iff every stage passed (harness `weak` rows are expected for
 the documented oracle-less keys and don't fail the gate).
