@@ -54,14 +54,10 @@ def get_spark(
         # :func:`autosize_initial_partitions`, which sources/io.load_table
         # invokes with the directory actually being scanned — so a user
         # running the library at 100× with defaults gets data-volume-sized
-        # initial maps without touching any knob. The env var remains the
-        # explicit override (it also disables autosizing).
+        # initial maps without touching any knob.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_PARTITIONS",
-                str(shuffle_partitions or cpus),
-            ),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -71,16 +67,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # Shuffle/spill block codec (VERDICT r13 #5): the SMJ-heavy 100×
-        # keys are bottlenecked on single-disk spill bandwidth under
-        # local[32] (time exponent 1.3+ while shuffle BYTES are linear);
-        # a stronger codec trades spare CPU for disk bytes. Static conf —
-        # set before the JVM exists — hence env-tunable for A/B measurement
+        # Shuffle/spill block codec (VERDICT r13 #5): zstd halved shuffle
+        # and spill bytes at 100× but cost +32% wall on a CPU-bound host
         # (SCALING_r14.md records the lz4-vs-zstd comparison).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        .config("spark.io.compression.codec", "lz4")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -191,16 +181,8 @@ def autosize_initial_partitions(
     Zipfian-safe 8 MiB. The declaration is per-LOAD because the conf is
     global: within an epoch the finest requirement still wins, so a
     skew-unknown load in the same epoch keeps its fine maps.
-
-    ``SPARK_GRAFT_INITIAL_PARTITIONS`` set in the environment is an
-    explicit operator override: autosizing becomes a no-op and the env
-    value itself is returned (ADVICE r14 #3 — no conf read, so foreign
-    sessions that never set the conf key don't raise).
     """
     conf_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    env = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    if env:
-        return int(env)
     target = (
         _UNIFORM_TARGET_SCAN_BYTES_PER_PARTITION
         if uniform_reduce_keys
@@ -253,11 +235,7 @@ def autosize_stream_state_partitions(
     ``spark.sql.shuffle.partitions`` through :func:`scoped_conf` around the
     query's ``start()`` only: the started query keeps its clone of the
     conf, and the session value is restored because batch operators read
-    it as a parallelism target (``sources.io.ensure_parallelism``).
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` is the explicit operator override."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return int(env)
+    it as a parallelism target (``sources.io.ensure_parallelism``)."""
     total = sum(_dir_bytes(d) for d in set(replayed_dirs))
     n = -(-total // _STREAM_TARGET_BYTES_PER_PARTITION)  # ceil
     floor = (

@@ -47,9 +47,11 @@ sf0.1.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +64,10 @@ from rocana_impala_udfs_spark.sources.io import load_table
 
 
 _REPLAY_DIRS: dict = {}
+# Every replay and restart directory lives under one per-process root,
+# created on first use and removed when the process exits.
+_ROOT: str | None = None
+_ROOT_LOCK = threading.Lock()
 
 ROCKSDB_STATE_STORE = {
     "spark.sql.streaming.stateStore.providerClass": (
@@ -84,20 +90,6 @@ _PYTHON_STATE_NODES = (
     "TransformWithStateInPySpark",
     "TransformWithStateInPandas",
 )
-
-
-# Most-recent streaming run's final stateful-operator progress, refreshed by
-# every runner (None when the query had no stateful operator).
-# The streaming scale sweep (tools/scaling_stream_sweep.py, VERDICT r13 #2)
-# reads state-store growth — numRowsTotal / memoryUsedBytes per operator —
-# through the EXACT driver-key path without threading a capture list into
-# every plan function.
-LAST_PROGRESS: dict = {"progress": None}
-# ``sink_rows_total`` (r16): cumulative rows the query's SINK received
-# across ALL triggers — complete mode re-emits the whole result table per
-# trigger, so this is what quantifies the re-emission cost the
-# foreachBatch-merge twins avoid (their number is the upsert log's total
-# delta rows). Read by tools/scaling_stream_sweep.py.
 
 
 def _stream_confs(out: DataFrame, python_stateful: bool | None) -> dict:
@@ -136,6 +128,17 @@ def _stream_confs(out: DataFrame, python_stateful: bool | None) -> dict:
     return confs
 
 
+def _tmp_dir(prefix: str) -> str:
+    """A new directory under the process's replay root, which is created
+    (again, if something removed it) on first use and removed at exit."""
+    global _ROOT
+    with _ROOT_LOCK:
+        if _ROOT is None or not os.path.isdir(_ROOT):
+            _ROOT = tempfile.mkdtemp(prefix="rocana_replay_")
+            atexit.register(shutil.rmtree, _ROOT, True)
+        return tempfile.mkdtemp(prefix=prefix, dir=_ROOT)
+
+
 def _run(
     out: DataFrame,
     writer,
@@ -143,27 +146,18 @@ def _run(
     capture_plan: list | None = None,
 ) -> None:
     """Start ``writer`` (``out.writeStream`` with its sink set) under
-    :func:`_stream_confs`, drain every available input, stop, and record
-    the progress in :data:`LAST_PROGRESS`. The confs are scoped to
-    ``start()`` alone (the query runs on its clone of them), so no other
-    thread's query or batch plan sees them while this one drains."""
+    :func:`_stream_confs`, drain every available input and stop. The confs
+    are scoped to ``start()`` alone (the query runs on its clone of them),
+    so no other thread's query or batch plan sees them while this one
+    drains. A ``StreamingQueryListener`` sees the query's progress."""
     with scoped_conf(out.sparkSession, _stream_confs(out, python_stateful)):
         q = writer.start()
     try:
         q.processAllAvailable()
         if capture_plan is not None:
             capture_plan.append(q._jsq.explainInternal(False))
-        progress = q.recentProgress
     finally:
         q.stop()
-    with_state = [p for p in progress if p.get("stateOperators")]
-    LAST_PROGRESS["progress"] = with_state[-1] if with_state else None
-    LAST_PROGRESS["sink_rows_total"] = sum(
-        n
-        for p in progress
-        for n in [int((p.get("sink") or {}).get("numOutputRows", -1))]
-        if n >= 0
-    )
 
 
 def replay_events_stream(
@@ -180,7 +174,7 @@ def replay_events_stream(
     key = (sf_dir, copies, files)
     d = _REPLAY_DIRS.get(key)
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="replay_events_")
+        d = _tmp_dir("replay_events_")
         for i in range(copies):
             # repartition, not coalesce: the source table is often a single
             # scan partition, and coalesce cannot INCREASE partition count —
@@ -301,10 +295,6 @@ def run_foreach_batch_merge(
             python_stateful,
         )
         log = out.sparkSession.read.parquet(log_dir)
-        # the log's total rows ARE the cumulative sink traffic: exactly the
-        # delta rows every trigger appended (foreachBatch progress reports
-        # numOutputRows=-1, so the log is the ground truth here)
-        LAST_PROGRESS["sink_rows_total"] = log.count()
         w = Window.partitionBy(*key_cols).orderBy(F.col("_merge_bid").desc())
         return (
             log.withColumn("_rn", F.row_number().over(w))
@@ -318,8 +308,9 @@ def run_foreach_batch_merge(
 
 def cleanup(path: str) -> None:
     """Remove a replay dir and forget its memo entry. The query keys keep
-    memoized replays for the process lifetime (a few MB in /tmp, rebuilt
-    lazily if removed); tests use this for explicit teardown."""
+    memoized replays for the process lifetime (a few MB under the replay
+    root, which is removed at exit; rebuilt lazily if removed); tests use
+    this for explicit teardown."""
     for k, v in list(_REPLAY_DIRS.items()):
         if v == path:
             del _REPLAY_DIRS[k]
@@ -350,8 +341,8 @@ def run_with_restart(spark: SparkSession, sf_dir: str, build_agg) -> DataFrame:
             f"run_with_restart needs >= 2 replay files to split across the "
             f"restart, found {len(files)} in {src}"
         )
-    stage = tempfile.mkdtemp(prefix="restart_stage_")
-    cp = tempfile.mkdtemp(prefix="restart_cp_")
+    stage = _tmp_dir("restart_stage_")
+    cp = _tmp_dir("restart_cp_")
 
     def run_once():
         s = (
@@ -379,10 +370,10 @@ def run_with_restart(spark: SparkSession, sf_dir: str, build_agg) -> DataFrame:
         name = run_once()  # phase 2: recovered state + only the new files
         return spark.table(name)
     finally:
+        # both queries are stopped and the memory table is materialized,
+        # so neither directory is read again
         shutil.rmtree(stage, ignore_errors=True)
-        # cp is left behind (a few KB in /tmp) — cleaning it here would be
-        # fine for the materialized memory table, but a harmless leak beats
-        # deleting a checkpoint another in-flight query name could reference
+        shutil.rmtree(cp, ignore_errors=True)
 
 
 def _ordered_replay(
@@ -406,7 +397,7 @@ def _ordered_replay(
 
     d = _REPLAY_DIRS.get(memo_key)
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix=prefix)
+        d = _tmp_dir(prefix)
         qs = [i / files for i in range(1, files)]
         cuts = src.approxQuantile(order_col, qs, 0.0) if files > 1 else []
         bounds = [None, *cuts, None]

@@ -117,6 +117,18 @@ def test_release_tool_dry_run(tmp_path):
     with open(os.path.join(REPO, "pyproject.toml"), "rb") as fh:
         assert tomllib.load(fh)["project"]["version"] == VERSION
 
+    # a dry run runs no git command, so it works outside a git work tree
+    # (e.g. a `git archive` copy): GIT_DIR at a missing directory makes
+    # every git call exit 128
+    r_nogit = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "release.py"),
+         "9.9.9", "9.9.10.dev0", "--dry-run"],
+        capture_output=True, text=True, cwd=REPO,
+        env={**os.environ, "GIT_DIR": str(tmp_path / "no-such-git-dir")},
+    )
+    assert r_nogit.returncode == 0, r_nogit.stderr
+    assert r_nogit.stdout == r.stdout
+
     r2 = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "release.py"),
          "not-a-version", "2.0.0", "--dry-run"],

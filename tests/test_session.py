@@ -6,8 +6,8 @@ The calibration anchor is empirical — the r13 sweep's 100× point (2.51 GB
 scan input) OOM'd under core-count initial maps and ran clean at 256 —
 so the tests pin the FORMULA's fixed points rather than re-running the
 100× workload: floor at the core count for bench-SF dirs, ceil(bytes/8MiB)
-for scale dirs, the 32768 practical ceiling, the env-override no-op, and
-the fact that load_table actually applies it.
+for scale dirs, the 32768 practical ceiling, and the fact that load_table
+actually applies it.
 
 r15 (ADVICE r14 #1): sizing is STICKY-MAX per session — Spark reads the
 conf at execution time, so a lazily-built big-dir frame must keep its
@@ -132,18 +132,6 @@ def test_cap_at_practical_ceiling(spark, tmp_path):
     assert autosize_initial_partitions(spark, d) == _MAX_INITIAL_PARTITIONS
 
 
-def test_env_override_disables_autosize(spark, tmp_path, monkeypatch):
-    before = spark.conf.get(CONF)
-    monkeypatch.setenv("SPARK_GRAFT_INITIAL_PARTITIONS", "7")
-    d = _fake_dir(tmp_path, "big4", 5 << 30)
-    n = autosize_initial_partitions(spark, d)
-    assert spark.conf.get(CONF) == before  # untouched — operator override wins
-    # the env value itself is returned, never read back through the conf:
-    # a foreign session that never set the conf key must not raise
-    # (ADVICE r14 #3)
-    assert n == 7
-
-
 def test_load_table_applies_autosize(spark):
     load_table(spark, SF_SMOKE, "region")
     assert SF_SMOKE in {k for k in _DIR_BYTES_MEMO}
@@ -198,15 +186,7 @@ def test_stream_partitions_python_stateful_floor_is_cores(spark, tmp_path):
     ) == spark.sparkContext.defaultParallelism
 
 
-def test_stream_partitions_env_override(spark, tmp_path, monkeypatch):
-    from rocana_impala_udfs_spark.session import autosize_stream_state_partitions
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "11")
-    d = _fake_dir(tmp_path, "s_env", 5 << 30)
-    assert autosize_stream_state_partitions(spark, d) == 11
-
-
-def test_run_to_table_applies_and_restores_state_partitions(spark):
+def test_run_to_table_applies_and_restores_state_partitions(spark, last_stateful_progress):
     """End to end through the exact driver-key path: the JVM-stateful
     complete-mode key runs its state at the machinery floor (pinned via
     the query's own StreamingQueryProgress), the Python-stateful tws key
@@ -215,23 +195,24 @@ def test_run_to_table_applies_and_restores_state_partitions(spark):
     target)."""
     from rocana_impala_udfs_spark.plans.temporal import TEMPORAL_QUERIES
     from rocana_impala_udfs_spark.session import _STREAM_MIN_PARTITIONS
-    from rocana_impala_udfs_spark.streaming import replay
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     TEMPORAL_QUERIES["stream_daily_event_stats"](spark, SF_SMOKE).collect()
-    ops = (replay.LAST_PROGRESS["progress"] or {}).get("stateOperators") or []
+    ops = (last_stateful_progress() or {}).get("stateOperators") or []
     assert [o.get("numShufflePartitions") for o in ops] == [_STREAM_MIN_PARTITIONS]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
     TEMPORAL_QUERIES["stream_tws_ewma_user_value"](spark, SF_SMOKE).collect()
-    ops = (replay.LAST_PROGRESS["progress"] or {}).get("stateOperators") or []
+    ops = (last_stateful_progress() or {}).get("stateOperators") or []
     assert [o.get("numShufflePartitions") for o in ops] == [
         spark.sparkContext.defaultParallelism
     ]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_stream_state_partitions_sized_from_the_query_own_replay(spark, monkeypatch):
+def test_stream_state_partitions_sized_from_the_query_own_replay(
+    spark, monkeypatch, last_stateful_progress
+):
     """The state partition count comes from the directory the query
     replays, not from whichever replay was built last in the process:
     with a per-partition target small enough that the sf0.001 and sf0.01
@@ -253,7 +234,7 @@ def test_stream_state_partitions_sized_from_the_query_own_replay(spark, monkeypa
 
     agg = stream_a.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     assert replay.run_to_table(agg, mode="complete").count() > 0
-    ops = replay.LAST_PROGRESS["progress"]["stateOperators"]
+    ops = last_stateful_progress()["stateOperators"]
     assert [o["numShufflePartitions"] for o in ops] == [n_a]
 
 
@@ -312,7 +293,6 @@ def test_default_core_count_is_the_process_affinity(monkeypatch):
     monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_INITIAL_PARTITIONS", raising=False)
     conf = session.get_spark()
     assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[3]", "3")
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")

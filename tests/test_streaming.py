@@ -3,6 +3,7 @@ stateful reservoir median across micro-batches (bounded state)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -788,7 +789,6 @@ def test_ordered_replay_is_time_ordered_and_complete(spark):
     """replay_events_stream_ordered: files cover disjoint ascending ts
     ranges (mtime order == range order) and the union replays every
     event exactly once."""
-    import os
 
     import pyspark.sql.functions as F
 
@@ -870,7 +870,6 @@ def test_stream_stream_join_crosses_batch_boundaries(spark):
     assert got == want
     # (2) planted cross-batch pair: a view in micro-batch 1 must match a
     # click arriving in micro-batch 2 purely from buffered join state
-    import os
     import tempfile
     import time as _time
 
@@ -1891,36 +1890,7 @@ def test_append_sink_crash_mid_batch_exactly_once(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_run_to_table_records_last_progress(spark):
-    """run_to_table must refresh replay.LAST_PROGRESS with the final
-    stateful-operator progress (numRowsTotal / memoryUsedBytes) — the hook
-    tools/scaling_stream_sweep.py reads state-store growth through, via the
-    exact driver-key path (VERDICT r13 #2)."""
-    from rocana_impala_udfs_spark.streaming import replay
-    from rocana_impala_udfs_spark.streaming.replay import (
-        replay_events_stream,
-        run_to_table,
-    )
-
-    replay.LAST_PROGRESS["progress"] = None
-    stream, _d = replay_events_stream(spark, SF)
-    agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    sink = run_to_table(agg, mode="complete")
-    assert sink.count() > 0
-    prog = replay.LAST_PROGRESS["progress"]
-    assert prog is not None, "stateful query left no progress"
-    ops = prog.get("stateOperators")
-    assert ops and int(ops[0]["numRowsTotal"]) > 0
-    assert int(ops[0]["memoryUsedBytes"]) > 0
-
-    # a STATELESS streaming query must reset it to None, not leave the
-    # previous query's state totals lying around
-    passthrough = stream.select("event_id", "event_type")
-    run_to_table(passthrough, mode="append")
-    assert replay.LAST_PROGRESS["progress"] is None
-
-
-def test_foreach_batch_merge_equals_complete_mode(spark):
+def test_foreach_batch_merge_equals_complete_mode(spark, last_stateful_progress):
     """The production-sink twin contract (VERDICT r15 #4): last-writer-wins
     merging of update-mode deltas into a keyed target must reproduce the
     complete-mode final table exactly — here for the CDC latest-wins view,
@@ -1932,11 +1902,8 @@ def test_foreach_batch_merge_equals_complete_mode(spark):
         q_stream_cdc_latest_merge,
         q_stream_cdc_latest_state,
     )
-    from rocana_impala_udfs_spark.streaming import replay
-
-    replay.LAST_PROGRESS["progress"] = None
     merged = {tuple(r) for r in q_stream_cdc_latest_merge(spark, SF).collect()}
-    prog = replay.LAST_PROGRESS["progress"]
+    prog = last_stateful_progress()
     assert prog is not None and int(prog["batchId"]) > 0, (
         "merge twin must run as a real multi-trigger stream"
     )
@@ -1983,6 +1950,54 @@ def test_foreach_batch_merge_leaves_no_log_dir(spark, tmp_path, monkeypatch):
         want = sorted(con.execute(oracle[key]).fetchall(), key=repr)
         assert got == want and got, key
     assert not list(tmp_path.glob("merge_log_*"))
+
+
+def test_replay_and_restart_dirs_live_under_one_root_removed_at_exit(
+    spark, tmp_path, monkeypatch
+):
+    """Every replay and restart directory is made under one per-process
+    root that an exit hook removes. With the temp dir pointed at tmp_path,
+    a replay key and the checkpoint-restart key still equal their DuckDB
+    oracles and no restart directory outlives its call; the registered
+    hook leaves tmp_path empty, and a later build recreates the removed
+    replay."""
+    import types
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from rocana_impala_udfs_spark.sources.io import TABLES
+    from rocana_impala_udfs_spark.streaming import replay
+
+    hooks = []
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(replay, "_ROOT", None)
+    monkeypatch.setattr(replay, "_REPLAY_DIRS", {})
+    monkeypatch.setattr(
+        replay, "atexit", types.SimpleNamespace(register=lambda *a: hooks.append(a))
+    )
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    qs, oracle = entry.queries(), entry.oracle_sql()
+    for key in ("stream_cdc_latest_state", "stream_checkpoint_restart_counts"):
+        got = sorted(map(tuple, qs[key](spark, SF).collect()), key=repr)
+        want = sorted(con.execute(oracle[key]).fetchall(), key=repr)
+        assert got == want and got, key
+    (root,) = tmp_path.iterdir()
+    assert sorted(p.name.rsplit("_", 1)[0] for p in root.iterdir()) == ["replay_events"]
+
+    def run_hooks():
+        for fn, *args in hooks:
+            fn(*args)
+        hooks.clear()
+
+    run_hooks()
+    assert not list(tmp_path.iterdir())
+    _stream, d = replay.replay_events_stream(spark, SF)
+    assert d.startswith(str(tmp_path)) and os.listdir(d)
+    run_hooks()
+    assert not list(tmp_path.iterdir())
 
 
 STRESS_KEYS = (

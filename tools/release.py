@@ -29,7 +29,8 @@ Usage:
   python tools/release.py RELEASE_VERSION NEXT_DEV_VERSION [--dry-run]
   python tools/release.py 1.1.1 1.1.2.dev0
 
-``--dry-run`` prints every step and rewrites nothing.
+``--dry-run`` prints every step and rewrites nothing; it runs no git
+command, so it also works outside a git work tree.
 """
 
 from __future__ import annotations
@@ -86,6 +87,10 @@ def _changelog_entry(version: str, dry: bool) -> None:
     """Prepend this release's section, seeded from the git subjects since
     the previous release-* tag (the human edits before shipping notes;
     the tool guarantees the section exists and is dated)."""
+    today = datetime.date.today().isoformat()
+    if dry:
+        print(f"DRY-RUN: changelog: add section {version} ({today})")
+        return
     try:
         last_tag = subprocess.run(
             ["git", "describe", "--tags", "--abbrev=0", "--match", "release-*"],
@@ -98,7 +103,6 @@ def _changelog_entry(version: str, dry: bool) -> None:
         ["git", "log", "--format=- %s", rng], cwd=REPO,
         capture_output=True, text=True, check=True,
     ).stdout.strip() or "- (no changes recorded)"
-    today = datetime.date.today().isoformat()
     section = f"## {version} — {today}\n\n{subjects}\n\n"
     header = "# Changelog\n\n"
     existing = ""
@@ -107,10 +111,9 @@ def _changelog_entry(version: str, dry: bool) -> None:
             existing = fh.read()
         if existing.startswith(header):
             existing = existing[len(header):]
-    print(f"{'DRY-RUN: ' if dry else ''}changelog: add section {version} ({today})")
-    if not dry:
-        with open(CHANGELOG, "w") as fh:
-            fh.write(header + section + existing)
+    print(f"changelog: add section {version} ({today})")
+    with open(CHANGELOG, "w") as fh:
+        fh.write(header + section + existing)
 
 
 def main() -> int:
@@ -124,14 +127,15 @@ def main() -> int:
         if not _VERSION_RE.match(v):
             raise SystemExit(f"invalid version {v!r} (want e.g. 1.1.1 / 1.1.2.dev0)")
 
-    dirty = subprocess.run(
-        ["git", "status", "--porcelain"], cwd=REPO,
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    if dirty and not dry:
-        raise SystemExit(
-            "working tree not clean — commit or stash first:\n" + dirty
-        )
+    if not dry:
+        dirty = subprocess.run(
+            ["git", "status", "--porcelain"], cwd=REPO,
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        if dirty:
+            raise SystemExit(
+                "working tree not clean — commit or stash first:\n" + dirty
+            )
 
     # 1. release version + changelog, committed (rocana-release.sh:26-39)
     _set_version(release, dry)
