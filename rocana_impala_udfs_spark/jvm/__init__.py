@@ -20,13 +20,24 @@ stream median in ``streaming/median_stream.py``, whose Structured
 Streaming state is the Aggregator buffer. These use :func:`udaf_column`
 and need no catalog registration.
 
-Loading works against a SparkSession the package did not create (a host
-application's): ``ADD JAR`` puts the jar on the shared jar classloader
-(executors included), the class is loaded through that loader, and
-``functions.udaf(agg, Encoders.row(schema))`` builds the function — all
-over py4j, no spark-submit flags needed. This happens once per
-application; later calls reuse the built function objects, so building a
-query issues no ``ADD JAR`` and runs no job.
+The jar also holds the engine's AQE runtime optimizer rule
+(``SmallSortInOnePartition``, a small final ``ORDER BY`` sorted in one
+task) and the ``RocanaSessionExtensions`` class that injects it.
+``session.get_spark`` launches the JVM with ``spark.jars`` set to
+:data:`JAR_PATH` and ``spark.sql.extensions`` set to
+:data:`EXTENSIONS_CLASS`, so the jar is on the driver and executor class
+paths from the start, and checks that the rule is in the session.
+
+Loading the functions also works against a SparkSession the package did
+not create (a host application's): there ``ADD JAR`` puts the jar on the
+shared jar classloader (executors included), the class is loaded through
+that loader, and ``functions.udaf(agg, Encoders.row(schema))`` builds the
+function — all over py4j, no spark-submit flags needed. ``ADD JAR`` runs
+only when the SparkContext does not already serve the jar, i.e. only in
+such a host session. This happens once per application; later calls reuse
+the built function objects, so building a query issues no ``ADD JAR`` and
+runs no job. A host session gets the sort rule only if it is launched with
+the same two confs.
 
 Spark runs update/merge inside ObjectHashAggregate with a real
 partial/final split: at 100 TB every executor reduces its partitions to
@@ -44,6 +55,10 @@ from pyspark.sql import Column, SparkSession
 JAR_PATH = os.path.join(os.path.dirname(__file__), "rocana-udaf.jar")
 _PKG = "rocana.spark.udaf."
 UDAF_CLASS = _PKG + "AppxMedianBounded"
+# session.get_spark launches with spark.sql.extensions=EXTENSIONS_CLASS, which
+# adds the AQE runtime optimizer rule SORT_RULE.
+EXTENSIONS_CLASS = _PKG + "RocanaSessionExtensions"
+SORT_RULE = _PKG + "SmallSortInOnePartition"
 _MEDIAN_INPUT = "value double, k int"
 
 # SQL name -> (Aggregator class, input schema). appx_median_bounded is the
@@ -68,7 +83,8 @@ _UDAF_LOCK = threading.Lock()
 
 def _udafs(spark: SparkSession) -> dict:
     """The JVM UserDefinedFunction of every name in :data:`FUNCTIONS`,
-    built once per application with one ``ADD JAR``. Raises
+    built once per application (with one ``ADD JAR`` if the context does
+    not serve the jar yet). Raises
     ``RuntimeError`` naming the classes and the jar path if the jar is
     missing or a class fails to load (class-version mismatch, bad encoder,
     corrupt artifact), instead of surfacing much later as an opaque
@@ -85,7 +101,8 @@ def _udafs(spark: SparkSession) -> dict:
                 "(rebuild with tools/build_jvm_udaf.sh)"
             )
         try:
-            spark.sql("ADD JAR '{}'".format(JAR_PATH.replace("'", "\\'")))
+            if not _jar_added(spark):
+                spark.sql("ADD JAR '{}'".format(JAR_PATH.replace("'", "\\'")))
             jvm = spark._jvm
             loader = spark._jsparkSession.sharedState().jarClassLoader()
             udfs = {}
@@ -102,6 +119,16 @@ def _udafs(spark: SparkSession) -> dict:
             ) from exc
         _UDAF_MEMO[key] = udfs
         return udfs
+
+
+def _jar_added(spark: SparkSession) -> bool:
+    """Whether the SparkContext already serves a jar named like
+    :data:`JAR_PATH` (``session.get_spark`` passes it in ``spark.jars``).
+    The context's file server keys jars by file name, so a second add of
+    the same name is only logged as "added already"."""
+    jars = spark.sparkContext._jsc.sc().listJars()
+    name = "/" + os.path.basename(JAR_PATH)
+    return any(jars.apply(i).endswith(name) for i in range(jars.length()))
 
 
 def register_jvm_udafs(spark: SparkSession) -> None:

@@ -3,7 +3,13 @@
 Scale notes (100 TB design, tested on local[N]):
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting, and
-  dynamic join-strategy switching replace hand-tuned partition counts.
+  dynamic join-strategy switching replace hand-tuned partition counts. The
+  fourth lever is the engine's own runtime rule
+  (``rocana.spark.udaf.SmallSortInOnePartition`` in ``jvm/rocana-udaf.jar``,
+  launched through ``spark.jars`` + ``spark.sql.extensions``): a global
+  ``ORDER BY`` over finished stages whose result fits one coalesced
+  partition sorts in one task, without the range shuffle's sampling job and
+  map stage. ``spark.sql.adaptive.optimizer.excludedRules`` switches it off.
 - Arrow on: every pandas-UDF boundary (the reservoir aggregation, text
   analysis, embedding ops) moves data in columnar Arrow batches, not pickled
   rows.
@@ -18,6 +24,8 @@ import os
 import threading
 
 from pyspark.sql import SparkSession
+
+from rocana_impala_udfs_spark import jvm
 
 
 def get_spark(
@@ -73,10 +81,29 @@ def get_spark(
         .config("spark.io.compression.codec", "lz4")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.jars", jvm.JAR_PATH)
+        .config("spark.sql.extensions", jvm.EXTENSIONS_CLASS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _require_sort_rule(spark)
+    return spark
+
+
+def _require_sort_rule(spark: SparkSession) -> None:
+    """Raise unless the session's AQE runtime optimizer holds the engine's
+    sort rule. Spark only logs a warning when an extensions class fails to
+    load (and ignores ``spark.sql.extensions`` when the session already
+    existed), then runs without it."""
+    rules = spark._jsparkSession.sessionState().adaptiveRulesHolder().runtimeOptimizerRules()
+    if not any(rules.apply(i).ruleName() == jvm.SORT_RULE for i in range(rules.length())):
+        raise RuntimeError(
+            f"AQE rule {jvm.SORT_RULE} is not in the session: extensions class "
+            f"{jvm.EXTENSIONS_CLASS} from {jvm.JAR_PATH} did not load (rebuild "
+            "with tools/build_jvm_udaf.sh; a session must be launched with "
+            "spark.jars and spark.sql.extensions set to them)"
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,25 @@ def spark():
 
 
 @pytest.fixture
+def jobs_in_group(spark):
+    """A function that runs ``fn()`` under job group ``group`` and returns
+    its result and the ids of the jobs it submitted (listener bus drained
+    first, so a job that ran is visible to the status tracker)."""
+
+    def run(group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group, False)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
 def last_stateful_progress(spark):
     """A function returning the last progress, as a dict, that a streaming
     query with state operators reported since the previous call (None if

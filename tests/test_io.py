@@ -376,33 +376,15 @@ def test_bloom_parquet_writes_real_footers_and_prunes(spark, tmp_path):
     assert df.count() == 0
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn()`` under job group ``group``; return its result and the
-    ids of the jobs it submitted (listener bus drained first, so a job
-    that ran is visible to the status tracker)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group, False)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_table_warm_path_runs_no_job(spark, tmp_path):
+def test_load_table_warm_path_runs_no_job(spark, tmp_path, jobs_in_group):
     """The second load of a table reuses the remembered schema: no
     schema-inference job, same schema, same rows."""
     shutil.copy(f"{SF}/orders.parquet", tmp_path / "orders.parquet")
     sf = str(tmp_path)
-    cold, cold_jobs = _jobs_in_group(
-        spark, "io-schema-cold", lambda: load_table(spark, sf, "orders")
-    )
+    cold, cold_jobs = jobs_in_group("io-schema-cold", lambda: load_table(spark, sf, "orders"))
     # the cold read infers the schema with a job — what the warm read skips
     assert cold_jobs
-    warm, warm_jobs = _jobs_in_group(
-        spark, "io-schema-warm", lambda: load_table(spark, sf, "orders")
-    )
+    warm, warm_jobs = jobs_in_group("io-schema-warm", lambda: load_table(spark, sf, "orders"))
     assert warm_jobs == []
     assert warm.schema == cold.schema
     assert sorted(warm.collect()) == sorted(cold.collect())
@@ -437,15 +419,13 @@ def test_load_table_self_join_not_ambiguous(spark):
     assert joined.count() == sum(n * n for n in per_region.values())
 
 
-def test_load_table_events_ts_timestamp_on_warm_path(spark):
+def test_load_table_events_ts_timestamp_on_warm_path(spark, jobs_in_group):
     """The events ts normalization still applies when the schema comes
     from the remembered entry rather than a fresh inference."""
     from pyspark.sql.types import TimestampType
 
     cold = load_table(spark, SF, "events")
-    warm, warm_jobs = _jobs_in_group(
-        spark, "io-events-warm", lambda: load_table(spark, SF, "events")
-    )
+    warm, warm_jobs = jobs_in_group("io-events-warm", lambda: load_table(spark, SF, "events"))
     assert warm_jobs == []
     assert isinstance(warm.schema["ts"].dataType, TimestampType)
     assert warm.agg(F.min("ts"), F.max("ts")).collect() == cold.agg(

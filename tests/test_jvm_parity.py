@@ -94,6 +94,34 @@ def test_register_jvm_udaf_fails_loudly(spark, monkeypatch, tmp_path):
     assert not spark.catalog.functionExists("jvm_udaf_bad_class")
 
 
+def test_add_jar_only_when_the_context_lacks_the_jar(spark, monkeypatch, tmp_path):
+    """get_spark passes the jar in ``spark.jars``, so building the
+    functions in a fresh application issues no ``ADD JAR`` (Spark would
+    log "has been added already"); a jar the context does not serve yet,
+    as in a host session, is still added."""
+    from rocana_impala_udfs_spark import jvm
+
+    statements = []
+    real_sql = type(spark).sql
+    monkeypatch.setattr(
+        type(spark),
+        "sql",
+        lambda self, q, *a, **kw: statements.append(q) or real_sql(self, q, *a, **kw),
+    )
+    monkeypatch.setattr(jvm, "_UDAF_MEMO", {})  # as in a fresh application
+    assert set(jvm._udafs(spark)) == set(jvm.FUNCTIONS)
+    assert not any("ADD JAR" in q.upper() for q in statements), statements
+
+    host_jar = tmp_path / "rocana-udaf-host.jar"
+    shutil.copyfile(JAR, host_jar)
+    monkeypatch.setattr(jvm, "JAR_PATH", str(host_jar))
+    monkeypatch.setattr(jvm, "_UDAF_MEMO", {})
+    assert not jvm._jar_added(spark)
+    assert set(jvm._udafs(spark)) == set(jvm.FUNCTIONS)
+    assert [q for q in statements if "ADD JAR" in q.upper()] == [f"ADD JAR '{host_jar}'"]
+    assert jvm._jar_added(spark)
+
+
 def _aggregator(spark, cls: str):
     """A fresh instance of a jar class, loaded like registration loads it."""
     from rocana_impala_udfs_spark import jvm

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+from rocana_impala_udfs_spark import jvm
 from rocana_impala_udfs_spark.session import scoped_conf
 
 sys.path.append(str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
@@ -1302,6 +1303,67 @@ def test_aqe_switches_smj_to_broadcast_at_runtime(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_SORT_RULE_OFF = {"spark.sql.adaptive.optimizer.excludedRules": jvm.SORT_RULE}
+
+
+def _final_plan(df) -> str:
+    """The ``== Final Plan ==`` section of an executed adaptive plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def test_small_final_sort_runs_in_one_partition_at_runtime(spark, jobs_in_group):
+    """The fourth AQE lever (session.py): the engine jar's runtime rule
+    sorts a small result of finished stages in one partition, so the
+    initial plan's ``Exchange rangepartitioning`` — a sampling job that
+    recomputes the final aggregate plus a range map stage — is gone from
+    the final plan and the key runs 2 jobs instead of 4. With the rule
+    excluded the same key takes the range shuffle and returns the same
+    rows in the same order."""
+    key = "appx_median_sql_onecall"
+    df = entry.queries()[key](spark, SF)
+    assert "Exchange rangepartitioning" in df._jdf.queryExecution().executedPlan().toString()
+    rows, jobs = jobs_in_group("sort-rule-on", df.collect)
+    assert "Exchange rangepartitioning" not in _final_plan(df)
+    assert "Coalesce 1" in _final_plan(df)
+    assert len(jobs) == 2, jobs
+
+    with scoped_conf(spark, _SORT_RULE_OFF):
+        off = entry.queries()[key](spark, SF)
+        off_rows, off_jobs = jobs_in_group("sort-rule-off", off.collect)
+    assert "Exchange rangepartitioning" in _final_plan(off)
+    assert len(off_jobs) == 4, off_jobs
+    assert off_rows == rows and len(rows) == 3
+
+
+def test_sort_rule_keeps_the_range_shuffle_where_one_task_would_cost(spark):
+    """The rule leaves the range exchange in place over a result larger
+    than one coalesced partition (1 MB, coalescePartitions.minPartitionSize),
+    over a bare scan (it would fold the scan into the one task), above a
+    sort-merge join of two small stages (it would fold the join in), and
+    over a small aggregate when partition coalescing is off (the range
+    shuffle then keeps its partitions)."""
+    digests = spark.range(0, 100_000).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    big = digests.groupBy("h").count().orderBy("h")
+    scan = spark.read.parquet(f"{SF}/nation.parquet").orderBy("n_name")
+    counts = spark.range(0, 1000).groupBy((F.col("id") % 10).alias("k")).count()
+    sums = spark.range(0, 1000).groupBy((F.col("id") % 10).alias("k")).agg(F.sum("id"))
+    joined = counts.join(sums, "k").orderBy("k")
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        for df in (big, scan, joined):
+            df.collect()
+            assert "Exchange rangepartitioning" in _final_plan(df)
+    assert "SortMergeJoin" in _final_plan(joined)
+    assert big.count() == 100_000 and [r.k for r in joined.collect()] == list(range(10))
+    with scoped_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        small = counts.orderBy("k")
+        assert [r.k for r in small.collect()] == list(range(10))
+        assert "Exchange rangepartitioning" in _final_plan(small)
 
 
 def test_dynamic_partition_pruning_engages(spark, tmp_path):

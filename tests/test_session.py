@@ -263,14 +263,24 @@ def test_scoped_conf_restores_set_unset_on_raise_and_nested(spark):
     assert spark.conf.get(set_key) == before
 
 
-def test_default_core_count_is_the_process_affinity(monkeypatch):
-    """With SPARK_GRAFT_CPUS unset, get_spark sizes ``local[N]`` and the
-    shuffle partitions to the cores this process may run on; when set, the
-    variable wins. A recording builder stands in for SparkSession's, so no
-    second JVM starts."""
+def _record_builds(monkeypatch, rule_names):
+    """Swap in a recording builder for SparkSession's, so no second JVM
+    starts. Its ``getOrCreate`` returns a stand-in session whose ``confs``
+    are the master and confs get_spark set, and whose AQE runtime
+    optimizer holds rules named ``rule_names``."""
     import types
 
     from rocana_impala_udfs_spark import session
+
+    rules = [types.SimpleNamespace(ruleName=lambda n=n: n) for n in rule_names]
+    holder = types.SimpleNamespace(
+        runtimeOptimizerRules=lambda: types.SimpleNamespace(
+            length=lambda: len(rules), apply=rules.__getitem__
+        )
+    )
+    jsession = types.SimpleNamespace(
+        sessionState=lambda: types.SimpleNamespace(adaptiveRulesHolder=lambda: holder)
+    )
 
     class Builder:
         def __init__(self):
@@ -288,13 +298,42 @@ def test_default_core_count_is_the_process_affinity(monkeypatch):
             return self
 
         def getOrCreate(self):
-            return self.conf
+            return types.SimpleNamespace(confs=self.conf, _jsparkSession=jsession)
 
     monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Builder()))
+
+
+def test_default_core_count_is_the_process_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes ``local[N]`` and the
+    shuffle partitions to the cores this process may run on; when set, the
+    variable wins. A recording builder stands in for SparkSession's, so no
+    second JVM starts."""
+    from rocana_impala_udfs_spark import jvm, session
+
+    _record_builds(monkeypatch, [jvm.SORT_RULE])
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    conf = session.get_spark()
+    conf = session.get_spark().confs
     assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[3]", "3")
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
-    conf = session.get_spark()
+    conf = session.get_spark().confs
     assert (conf["master"], conf["spark.sql.shuffle.partitions"]) == ("local[5]", "5")
+
+
+def test_missing_sort_rule_extension_fails_loudly(monkeypatch):
+    """get_spark launches with the engine jar in ``spark.jars`` and its
+    extensions class in ``spark.sql.extensions``. Spark only logs a
+    warning when that class fails to load, so a session whose AQE runtime
+    optimizer lacks the sort rule must raise, naming the class and the
+    jar."""
+    from rocana_impala_udfs_spark import jvm, session
+
+    _record_builds(monkeypatch, ["org.example.OtherRule"])
+    with pytest.raises(RuntimeError) as err:
+        session.get_spark()
+    assert jvm.EXTENSIONS_CLASS in str(err.value) and jvm.JAR_PATH in str(err.value)
+
+    _record_builds(monkeypatch, ["org.example.OtherRule", jvm.SORT_RULE])
+    conf = session.get_spark().confs
+    assert conf["spark.jars"] == jvm.JAR_PATH
+    assert conf["spark.sql.extensions"] == jvm.EXTENSIONS_CLASS

@@ -1,8 +1,9 @@
 #!/bin/sh
-# Build the one-statement SQL UDAF jar (rocana_impala_udfs_spark/jvm).
+# Build the engine jar (rocana_impala_udfs_spark/jvm): the reservoir UDAF
+# Aggregators and the AQE sort rule with its session extensions class.
 # Pure JDK toolchain: javac against the pyspark-bundled Spark jars, then
 # `jar`. The built artifact is committed (rocana-udaf.jar) so runtime
-# environments without a JDK still load it via ADD JAR.
+# environments without a JDK still load it (spark.jars, or ADD JAR).
 set -e
 cd "$(dirname "$0")/.."
 SPARK_JARS=$(python -c "import pyspark, os; print(os.path.join(os.path.dirname(pyspark.__file__), 'jars'))")
